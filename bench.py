@@ -104,7 +104,6 @@ def family_bench(families: set[str]) -> None:
     import __spark_entry__ as entrymod
 
     fam_map = entrymod.query_families()
-    assert set(fam_map) == set(entrymod.queries()), "untagged registry entries"
     unknown = families - set(fam_map.values())
     assert not unknown, f"unknown --family values: {sorted(unknown)}"
     keys = [k for k, f in fam_map.items() if f in families]
@@ -695,40 +694,10 @@ def main() -> None:
     )
     timings["hilbert_stats"] = time.time() - t0
 
-    t0 = _probe_mark("s2cell_stats_l6")
-    from linear_quadtree_spark.functions.s2cell import s2_cap_cover, with_s2cell
     _s2lon, _s2lat = lonlat_from_id_exprs(_SENG, "pid")
     s2pts = pts.select(
         "pid", F.expr(_s2lon).alias("lon"), F.expr(_s2lat).alias("lat")
     )
-    s2_rows = (
-        with_s2cell(s2pts, "lon", "lat", 6).groupBy("s2cell").count().count()
-    )
-    timings["s2cell_stats_l6"] = time.time() - t0
-
-    t0 = _probe_mark("s2_cap_query")
-    from linear_quadtree_spark.functions.s2cell import merge_ranges
-    _spans: list = []
-    for _slon, _slat in ((139.69, 35.69), (-74.01, 40.71), (-0.13, 51.51)):
-        _spans.extend(s2_cap_cover(_slon, _slat, 1200.0, 4))
-    _mg = merge_ranges(_spans)
-    _rdf = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in _mg], "lo long, hi long"
-    )
-    _hav = haversine_km_expr(
-        _SENG, "lon", "lat", "CAST(-74.01 AS DOUBLE)", "CAST(40.71 AS DOUBLE)"
-    )
-    s2cap_rows = (
-        with_s2cell(s2pts, "lon", "lat", 4)
-        .join(
-            F.broadcast(_rdf),
-            (F.col("s2cell") >= F.col("lo")) & (F.col("s2cell") <= F.col("hi")),
-            "leftsemi",
-        )
-        .filter(F.expr(_hav) <= 1200.0)
-        .count()
-    )
-    timings["s2_cap_query"] = time.time() - t0
 
     t0 = _probe_mark("s2real_stats")
     from linear_quadtree_spark.functions.s2real import (
@@ -1160,8 +1129,6 @@ def main() -> None:
             "pixel_rows": pixel_rows,
             "hexcell_rows": hex_rows,
             "hilbert_rows": hilb_rows,
-            "s2cell_rows": s2_rows,
-            "s2_cap_rows": s2cap_rows,
             "bpe_pair_rows": bpe_rows,
             "bpe_segment_rows": bseg_rows,
             "lm_coverage_rows": lmcov_rows,

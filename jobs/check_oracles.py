@@ -153,9 +153,7 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:]) or None
     fam_map = entrymod.query_families()
-    # totality: every registry entry must carry a family tag, and every
-    # requested family must exist — typos fail loudly, never filter to ∅
-    assert set(fam_map) == set(entrymod.queries()), "untagged registry entries"
+    # every requested family must exist — typos fail loudly, never filter to ∅
     unknown = families - set(fam_map.values())
     assert not unknown, f"unknown --family values: {sorted(unknown)}"
     if families:
@@ -178,9 +176,6 @@ def main() -> int:
         if only and name not in only:
             continue
         if types_only:
-            if name not in oracles:
-                print(f"  {name}: rows-only (no oracle — type check n/a)")
-                continue
             try:
                 drift = type_drift(fn(spark, sf_dir), con, oracles[name])
             except Exception as ex:  # noqa: BLE001
@@ -195,9 +190,6 @@ def main() -> int:
         spark_df = fn(spark, sf_dir)
         got = spark_df.toPandas()
         t1 = time.time()
-        if name not in oracles:
-            print(f"  {name}: rows-only ({len(got)} rows, {t1-t0:.1f}s spark)")
-            continue
         exp = con.execute(oracles[name]).fetch_df()
         g, e = normalize(got), normalize(exp)
         status = []

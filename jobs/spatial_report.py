@@ -122,7 +122,7 @@ def main() -> int:
         "users": len({r.user_id for r in gf}),
     }
 
-    caps = q["s2_cap_query"](spark, args.sf_dir).collect()
+    caps = q["s2real_cap_query"](spark, args.sf_dir).collect()
     report["site_reach"] = {
         r.site: int(r.n_pages) for r in sorted(caps, key=lambda r: r.site)
     }

@@ -1,13 +1,10 @@
 """REAL S2CellId construction — library-interchangeable id packing.
 
-`functions/s2cell.py` ships the S2-STYLE index (same cube-face +
-quadratic-ST + Hilbert shape, simplified packing) and documents that
-its raw ids are NOT interchange-compatible with the `s2geometry`
-library. This module closes that gap (round-4 VERDICT "What's missing"
-#3) with the library's EXACT id construction, transcribed from the
-public S2 geometry specification and the open-source `s2geometry`
-sources (s2coords.h `GetFace`/`ValidFaceXYZtoUV`/`STtoUV`;
-s2cell_id.cc `FromFaceIJ`, `kPosToIJ`, `kPosToOrientation`, the
+This module implements the `s2geometry` library's EXACT id
+construction, so its ids are interchange-compatible with the library.
+It is transcribed from the public S2 geometry specification and the
+open-source `s2geometry` sources (s2coords.h `GetFace`,
+`ValidFaceXYZtoUV`, `STtoUV`; s2cell_id.cc `FromFaceIJ`, `kPosToIJ`, `kPosToOrientation`, the
 4-bit `lookup_pos`/`lookup_ij` table build, and the
 `id = face<<61 | pos<<1 | 1` trailing-lsb packing):
 
@@ -15,7 +12,7 @@ s2cell_id.cc `FromFaceIJ`, `kPosToIJ`, `kPosToOrientation`, the
    library's STRICT `>` tie order (ties fall to the later axis),
    `+3` when that component is negative.
 2. Per-face (u, v) via the exact `ValidFaceXYZtoUV` sign table —
-   note face 4's `v = -x/y`, which the style module simplifies away.
+   note face 4's `v = -x/y`.
 3. Quadratic ST: `s = u >= 0 ? sqrt(1+3u)/2 : 1 - sqrt(1-3u)/2`.
 4. `i = clamp(floor(2^30 * s), 0, 2^30-1)` (`STtoIJ` semantics — no
    dyadic +0.5 snap here; spec exactness wins, and the margin audit in
@@ -44,7 +41,7 @@ invariants only the genuine construction satisfies, tested: the
 lookup tables are mutual inverses, consecutive leaf positions are
 lattice neighbors WITHIN a face (the Hilbert continuity property),
 the curve stays continuous ACROSS face boundaries (the kSwapMask
-seeding property — the style module fails this by design), face-cell
+seeding property), face-cell
 ids equal `face<<61 | 1<<60`, and parent ranges nest. A wrong row in
 `kPosToIJ`/`kPosToOrientation` or a wrong seed breaks (b).
 
@@ -53,8 +50,8 @@ All algebra here is bit-ops (sign-safe); ORDER comparisons (range
 scans, BETWEEN pruning) go through `s2real_sortkey_expr` = id XOR
 1<<63, the engine-wide unsigned-order discipline (SURVEY §1.2).
 
-Scale: the forward key is map-only — scalar stages are the same
-engine-templated text as the style module, and the Hilbert chain is
+Scale: the forward key is map-only — scalar stages are
+engine-templated text shared by both engines, and the Hilbert chain is
 8 `element_at`s on ONE ArrayType literal (a single Catalyst Literal
 node, evaluated inside whole-stage codegen; the DuckDB twin replays
 the same 1024-int table as a list literal in one CTE). Zero Python in
@@ -95,6 +92,11 @@ __all__ = [
 ]
 
 S2_MAX_LEVEL = 30
+#: `s2real_cap_cover` scans all 6 * 4^level cells in numpy: level 8
+#: peaks at ~72 MB of driver memory, and each level costs 4x more, so
+#: level 10 needs ~1.2 GB. Higher levels raise instead of exhausting
+#: memory; use `s2real_region_cover` for fine covers.
+S2_CAP_COVER_MAX_LEVEL = 10
 _LOOKUP_BITS = 4
 _SWAP = 0x01
 _INVERT = 0x02
@@ -603,10 +605,14 @@ def s2real_cap_cover(
     short signed-SORTKEY span list for BETWEEN pruning.
 
     Driver-side query-constant planning, O(6 * 4^level) numpy —
-    the same discipline as s2cell.s2_cap_cover and the planar cover
-    planner; the spans are a conservative SUPERSET, so an exact
-    haversine refine downstream keeps answers identical to a
-    cover-free oracle."""
+    the same discipline as the planar cover planner; the spans are a
+    conservative SUPERSET, so an exact haversine refine downstream
+    keeps answers identical to a cover-free oracle. ``level`` must lie
+    in [0, S2_CAP_COVER_MAX_LEVEL]; anything else raises ValueError."""
+    if not 0 <= level <= S2_CAP_COVER_MAX_LEVEL:
+        raise ValueError(
+            f"cap cover level {level} outside [0, {S2_CAP_COVER_MAX_LEVEL}]"
+        )
     from linear_quadtree_spark.functions.mercator import EARTH_RADIUS_KM
     from linear_quadtree_spark.intervals import merge_spans
 
@@ -673,7 +679,7 @@ def s2real_region_cover(
     refines — tighter than any fixed-level cover at equal budget.
     Per-cell geometry is exact (center + 4 true corners), not a
     remembered library metric constant. Driver-side query planning,
-    O(cells visited) python — the s2_cap_cover/kNN-planner
+    O(cells visited) python — the s2real_cap_cover/kNN-planner
     discipline."""
     import heapq
 

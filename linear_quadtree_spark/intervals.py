@@ -3,9 +3,9 @@
 Closed [lo, hi] spans coalesce when they overlap OR are adjacent
 (lo <= prev_hi + 1) — the adjacency rule lives here only. Consumers:
 the z-order cover planner (`plans.cover.merge_ranges`, via ZRange),
-the S2 cap planner and cap-query multi-site union
-(`functions.s2cell.merge_ranges`, a re-export), and the quadrant-run
-directory pruning in `operators.build.LQTTable.quad_runs_for_ranges`.
+the real-S2 cap and region covers (`functions.s2real`) and the
+cap-query multi-site union, and the quadrant-run directory pruning in
+`operators.build.LQTTable.quad_runs_for_ranges`.
 A layering-neutral leaf module: imports nothing from the package.
 """
 

@@ -1205,7 +1205,7 @@ def geary_c(tbl: LQTTable, zoom: int) -> DataFrame:
         "n AS n_tiles",
         "w AS w_pairs",
         _GEARY_C_EXPR + " AS geary_c",
-        "CASE WHEN n <= 1 THEN NULL ELSE 1.0 END AS expected_c",
+        "CASE WHEN n <= 1 THEN NULL ELSE CAST(1.0 AS DOUBLE) END AS expected_c",
     )
 
 
@@ -1238,7 +1238,7 @@ fin AS (SELECT dagg.n AS n, pagg.w AS w, pagg.ssw AS ssw, dagg.sumd2 AS sumd2
         FROM dagg, pagg)
 SELECT n AS n_tiles, w AS w_pairs,
        {_GEARY_C_EXPR} AS geary_c,
-       CASE WHEN n <= 1 THEN NULL ELSE 1.0 END AS expected_c
+       CASE WHEN n <= 1 THEN NULL ELSE CAST(1.0 AS DOUBLE) END AS expected_c
 FROM fin
 """
 
@@ -1265,7 +1265,8 @@ def tile_gini(tbl: LQTTable, zoom: int, full_lattice: bool = True) -> DataFrame:
     that, bin counts first (the quantiles discipline).
 
     Output one row: (n_cells, n_occupied, sum_points, gini_num,
-    gini_den, gini)."""
+    gini_den, gini). gini_num and gini_den are BIGINT: the exact
+    DECIMAL (HUGEINT in DuckDB) arithmetic stays inside the sums."""
     n_lattice = 1 << (2 * zoom)
     from pyspark.sql import Window
 
@@ -1290,9 +1291,9 @@ def tile_gini(tbl: LQTTable, zoom: int, full_lattice: bool = True) -> DataFrame:
         "s AS sum_points",
         f"CAST(2 * ({zoff} * CAST(s AS DECIMAL(38,0)) + jx)"
         f" - (CAST({n_expr} AS DECIMAL(38,0)) + 1) * CAST(s AS DECIMAL(38,0))"
-        " AS DECIMAL(38,0)) AS gini_num",
+        " AS BIGINT) AS gini_num",
         f"CAST(CAST({n_expr} AS DECIMAL(38,0)) * CAST(s AS DECIMAL(38,0))"
-        " AS DECIMAL(38,0)) AS gini_den",
+        " AS BIGINT) AS gini_den",
         "CASE WHEN s = 0 OR s IS NULL THEN NULL"
         f" ELSE CAST(2 * ({zoff} * CAST(s AS DECIMAL(38,0)) + jx)"
         f" - (CAST({n_expr} AS DECIMAL(38,0)) + 1) * CAST(s AS DECIMAL(38,0))"
@@ -1325,9 +1326,9 @@ SELECT CAST({n_expr} AS BIGINT) AS n_cells,
        s AS sum_points,
        CAST(2 * ({zoff} * CAST(s AS HUGEINT) + jx)
             - (CAST({n_expr} AS HUGEINT) + 1) * CAST(s AS HUGEINT)
-         AS DECIMAL(38,0)) AS gini_num,
+         AS BIGINT) AS gini_num,
        CAST(CAST({n_expr} AS HUGEINT) * CAST(s AS HUGEINT)
-         AS DECIMAL(38,0)) AS gini_den,
+         AS BIGINT) AS gini_den,
        CASE WHEN s = 0 OR s IS NULL THEN NULL
             ELSE CAST(2 * ({zoff} * CAST(s AS HUGEINT) + jx)
                  - (CAST({n_expr} AS HUGEINT) + 1) * CAST(s AS HUGEINT)

@@ -66,6 +66,16 @@ def test_merge_ranges():
     assert merge_ranges(rs) == [ZRange(0, 9), ZRange(20, 30)]
 
 
+def test_merge_spans():
+    from linear_quadtree_spark.intervals import merge_spans
+
+    assert merge_spans([]) == []
+    assert merge_spans([(5, 6), (1, 2), (3, 4)]) == [(1, 6)]
+    assert merge_spans([(5, 6), (1, 2), (3, 3)]) == [(1, 3), (5, 6)]
+    assert merge_spans([(1, 2), (4, 5)]) == [(1, 2), (4, 5)]
+    assert merge_spans([(1, 10), (2, 3), (12, 12)]) == [(1, 10), (12, 12)]
+
+
 def test_empty_rect():
     assert cover_rect(10, 5, 0, 1, DEFAULT_BOUNDS) == []
 

@@ -648,12 +648,12 @@ def test_distance_decay_single_source_pass(spark, sf_dir):
 
 
 def test_s2cell_stats_single_aggregate_no_udf(spark, sf_dir):
-    """S2 encode is a map-only expression chain: the per-cell rollup
-    must show exactly the aggregate's shuffle (partial + final around
-    ONE Exchange) and no Python evaluation anywhere."""
+    """Real-S2 encode is a map-only expression chain: the per-cell
+    rollup (s2real_stats) must show only the aggregate's shuffles and
+    no Python evaluation anywhere."""
     import __spark_entry__ as entry
 
-    plan = _plan(entry._q_s2cell_stats(spark, sf_dir))
+    plan = _plan(entry._q_s2real_stats(spark, sf_dir))
     assert plan.count("Exchange") <= 2  # distinct-agg rewrite: <= 2 stages
     assert "PythonUDF" not in plan and "ArrowEval" not in plan
     assert "BatchEvalPython" not in plan
@@ -702,11 +702,11 @@ def test_geofence_single_window_exchange_no_join(spark, sf_dir):
 
 
 def test_s2_cap_query_broadcasts_ranges_and_sites(spark, sf_dir):
-    """The range prefilter must be a broadcast semi join (NOT an
-    OR-of-BETWEEN filter over the live chain — the documented plan-size
-    blowup), and the site dimension must broadcast."""
+    """The real-S2 cap query's range prefilter must be a broadcast semi
+    join (NOT an OR-of-BETWEEN filter over the live chain — the
+    documented plan-size blowup), and the site dimension must broadcast."""
     import __spark_entry__ as entry
 
-    plan = _plan(entry._q_s2_cap_query(spark, sf_dir))
+    plan = _plan(entry._q_s2real_cap(spark, sf_dir))
     assert "BroadcastExchange" in plan
     assert "LeftSemi" in plan

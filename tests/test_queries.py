@@ -229,6 +229,21 @@ def test_build_sortedness_and_count(tbl, points_pdf):
     assert tbl.main.count() + tbl.side.count() == len(points_pdf)
 
 
+def test_log_metrics_writes_plan_secs(spark, points_pdf, tmp_path):
+    """A lazy build (eager_count=False) has run no encode yet, so the
+    durable metrics row carries the build's driver time as
+    build_plan_secs, never as an encode time."""
+    t = LQTTable.build(spark.createDataFrame(points_pdf), DEFAULT_BOUNDS,
+                       tiebreaker="key", eager_count=False)
+    try:
+        cols = t.log_metrics(str(tmp_path / "metrics"), "b1").columns
+    finally:
+        t.unpersist()
+    assert "build_plan_secs" in cols
+    assert "build_encode_secs" not in cols
+    assert "build_rows" not in cols  # rows is None without the count
+
+
 def test_knn_bulk_distributed(tbl, points_pdf, spark):
     """Bulk kNN: a 400-row distributed query table (never collected to
     the driver) matches brute force exactly — the scale path the

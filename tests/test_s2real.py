@@ -9,8 +9,7 @@ that never touches the chunk tables) must agree exactly, and the
 structural properties below pin the parts a transcription error would
 break: table inversibility, within-face Hilbert adjacency, EXACT
 cross-face curve continuity (endpoint corners coincide on the cube —
-the kSwapMask per-face seeding property; the S2-STYLE module in
-functions/s2cell.py intentionally lacks this), face-cell id values,
+the kSwapMask per-face seeding property), face-cell id values,
 and nested parent ranges.
 """
 
@@ -228,6 +227,16 @@ def test_token_of_negative_face_ids():
     assert signed < 0
     p = s2real_parent_py(cid, 8)
     assert s2real_level_py(p) == 8 and p >> 61 == 5
+
+
+@pytest.mark.parametrize("level", [-1, 11, 13, 30])
+def test_cap_cover_rejects_out_of_range_level(level):
+    """The fixed-level cap cover scans 6 * 4^level cells on the driver:
+    levels outside [0, S2_CAP_COVER_MAX_LEVEL] raise before allocating."""
+    from linear_quadtree_spark.functions.s2real import s2real_cap_cover
+
+    with pytest.raises(ValueError, match="cap cover level"):
+        s2real_cap_cover(139.69, 35.69, 1200.0, level=level)
 
 
 def test_cap_cover_conservative_and_short():
