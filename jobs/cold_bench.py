@@ -21,9 +21,6 @@ the OS page cache is NOT dropped (doing so would touch system state
 outside the repo), so "cold" means cold Spark state — JVM, block
 manager, substrate memoization — over a possibly OS-warm file system;
 the pre-section host probes are included per query like bench.py.
-
-Warm comparison: the same query names' timings from BENCH_FULL.json
-(the warm full bench) are quoted alongside when that file exists.
 """
 
 from __future__ import annotations
@@ -39,7 +36,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 REPO = Path(__file__).resolve().parent.parent
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 SUBSTRATE = str(
     REPO / ".cold_substrate" / Path(SF_DIR).name
 )
@@ -192,18 +189,11 @@ def phase_query() -> None:
 
     spark.stop()
 
-    warm: dict[str, float] = {}
-    full = REPO / "BENCH_FULL.json"
-    if full.exists():
-        wq = json.loads(full.read_text()).get("queries", {})
-        warm = {k: wq[k] for k in timings if k in wq}
-
     print(json.dumps({
         "metric": "cold_query_total_sec",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "warm_ref": warm,
         "result_rows": rows,
         "probes": PROBES,
         "sf": SF_DIR,

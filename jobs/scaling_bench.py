@@ -27,10 +27,14 @@ import os
 import subprocess
 import sys
 import time
+from collections.abc import Callable
 from pathlib import Path
+from typing import TypeVar
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
+
+T = TypeVar("T")
 
 REPS = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
 #: the north rule's bar — REPORTED against, never part of the stop rule:
@@ -102,78 +106,18 @@ def child(cores: int, rows: int) -> None:
 
     # gate INSIDE the child, after JVM startup + warmup: quiet windows
     # are often shorter than startup itself, so a parent-side gate alone
-    # launches measured regions into closed windows. Wait here with the
-    # JVM hot, measure the moment the window opens, then re-probe to
-    # certify the window HELD through the measured region.
-    gate_budget = float(os.environ.get("SPARK_GRAFT_SCALE_GATE_S", "600"))
-    t_gate0 = time.time()
-    while True:
-        pre = probe()
-        if _quiet(pre) or time.time() - t_gate0 > gate_budget:
-            break
-        time.sleep(20)
+    # launches measured regions into closed windows.
+    def build() -> None:
+        tbl = LQTTable.build(pts, DEFAULT_BOUNDS, tiebreaker="pid",
+                             persist=False, eager_count=False)
+        tbl.main.unionByName(tbl.side).write.format("noop").mode("overwrite").save()
 
-    # mid-region monitor: endpoint probes cannot see a host collapse
-    # that starts AND ends inside the measured region (observed: a
-    # local[8] run of 135s whose pre/post probes were both nominal). A
-    # daemon thread streams the 256MB bandwidth kernel every ~5s during
-    # the measured region and records the worst value. The job's own
-    # bandwidth use inflates the probe ~3-4x at most; a host collapse
-    # inflates it 30-100x — far past MID_BW_LIMIT_S.
-    import threading
-
-    import numpy as np
-
-    mid_max = [0.0]
-    mid_par8_max = [0.0]
-    stop_flag = [False]
-
-    def monitor() -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        big = np.zeros(32_000_000)
-        big *= 1.000001  # fault pages in: the first touch of a fresh 256MB
-        # allocation costs ~2s of page faults and would read as an
-        # in-region bandwidth collapse on a perfectly quiet host
-        small = np.random.default_rng(0).random(2_000_000)
-        tick = 0
-        while not stop_flag[0]:
-            t = time.time()
-            big *= 1.000001
-            mid_max[0] = max(mid_max[0], time.time() - t)
-            # every 3rd tick also sample MULTI-core throughput: observed
-            # a 167s wide-level run with nominal single-thread bandwidth
-            # throughout — the starved resource was parallel CPU, which
-            # only a parallel probe sees. 8 threads for ~0.1s every 15s
-            # is ~1% overhead on a healthy host.
-            if tick % 3 == 2:
-                t = time.time()
-                with ThreadPoolExecutor(8) as ex:
-                    list(ex.map(lambda _: np.sort(small), range(8)))
-                mid_par8_max[0] = max(mid_par8_max[0], time.time() - t)
-            tick += 1
-            time.sleep(5)
-
-    mon = threading.Thread(target=monitor, daemon=True)
-    mon.start()
-    t0 = time.time()
-    tbl = LQTTable.build(pts, DEFAULT_BOUNDS, tiebreaker="pid",
-                         persist=False, eager_count=False)
-    tbl.main.unionByName(tbl.side).write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    stop_flag[0] = True
-    mon.join(timeout=30)
-    post = probe()
+    _, m = gated_measure(
+        build, float(os.environ.get("SPARK_GRAFT_SCALE_GATE_S", "600")))
     spark.stop()
+    dt = m.pop("wall_s")
     print(json.dumps({"cores": cores, "rows": rows, "build_s": dt,
-                      "rows_per_sec": rows / dt,
-                      "probe_pre": [round(x, 2) for x in pre],
-                      "probe_post": [round(x, 2) for x in post],
-                      "probe_mid_max_bw": round(mid_max[0], 2),
-                      "probe_mid_max_par8": round(mid_par8_max[0], 2),
-                      "clean": (_quiet(pre) and _quiet(post)
-                                and mid_max[0] <= MID_BW_LIMIT_S
-                                and mid_par8_max[0] <= MID_PAR8_LIMIT_S)}))
+                      "rows_per_sec": rows / dt, **m}))
 
 
 def _settle(threshold: float = 2.0, max_wait: int = 180) -> None:
@@ -258,6 +202,83 @@ def probe() -> tuple[float, float, float]:
     big *= 1.000001
     bw = time.time() - t0
     return single, par8, bw
+
+
+def gated_measure(thunk: Callable[[], T], gate_s: float) -> tuple[T, dict]:
+    """Time ONE call of `thunk` under the certification protocol.
+
+    Gate: probe until the host reads quiet, for at most `gate_s` seconds;
+    call this with the JVM hot, right before the measured region. Monitor:
+    endpoint probes cannot see a host collapse that starts AND ends inside
+    the measured region (observed: a local[8] run of 135s whose pre/post
+    probes were both nominal), so a daemon thread streams the 256MB
+    bandwidth kernel every ~5s during the call and records the worst
+    value. The job's own bandwidth use inflates that probe ~3-4x at most;
+    a host collapse inflates it 30-100x — far past MID_BW_LIMIT_S.
+    Post-probe: certifies the window HELD through the measured region.
+
+    Returns (thunk's value, record); the record holds `wall_s`, the
+    pre/post probe triples, both in-flight maxima and `clean` — true only
+    when all of them were nominal."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+
+    t_gate0 = time.time()
+    while True:
+        pre = probe()
+        if _quiet(pre) or time.time() - t_gate0 > gate_s:
+            break
+        time.sleep(20)
+
+    mid_bw = [0.0]
+    mid_par8 = [0.0]
+    stop = threading.Event()
+
+    def monitor() -> None:
+        big = np.zeros(32_000_000)
+        big *= 1.000001  # fault pages in: the first touch of a fresh 256MB
+        # allocation costs ~2s of page faults and would read as an
+        # in-region bandwidth collapse on a perfectly quiet host
+        small = np.random.default_rng(0).random(2_000_000)
+        tick = 0
+        while True:
+            t = time.time()
+            big *= 1.000001
+            mid_bw[0] = max(mid_bw[0], time.time() - t)
+            # every 3rd tick also sample MULTI-core throughput: observed
+            # a 167s wide-level run with nominal single-thread bandwidth
+            # throughout — the starved resource was parallel CPU, which
+            # only a parallel probe sees. 8 threads for ~0.1s every 15s
+            # is ~1% overhead on a healthy host.
+            if tick % 3 == 2:
+                t = time.time()
+                with ThreadPoolExecutor(8) as ex:
+                    list(ex.map(lambda _: np.sort(small), range(8)))
+                mid_par8[0] = max(mid_par8[0], time.time() - t)
+            tick += 1
+            if stop.wait(5):
+                return
+
+    mon = threading.Thread(target=monitor, daemon=True)
+    mon.start()
+    t0 = time.time()
+    out = thunk()
+    wall = time.time() - t0
+    stop.set()
+    mon.join(timeout=30)
+    post = probe()
+    return out, {
+        "wall_s": wall,
+        "probe_pre": [round(x, 2) for x in pre],
+        "probe_post": [round(x, 2) for x in post],
+        "probe_mid_max_bw": round(mid_bw[0], 2),
+        "probe_mid_max_par8": round(mid_par8[0], 2),
+        "clean": (_quiet(pre) and _quiet(post)
+                  and mid_bw[0] <= MID_BW_LIMIT_S
+                  and mid_par8[0] <= MID_PAR8_LIMIT_S),
+    }
 
 
 def run_child(cores: int, rows: int, deadline_ts: float) -> dict:
