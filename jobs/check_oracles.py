@@ -155,7 +155,8 @@ def main() -> int:
     fam_map = entrymod.query_families()
     # every requested family must exist — typos fail loudly, never filter to ∅
     unknown = families - set(fam_map.values())
-    assert not unknown, f"unknown --family values: {sorted(unknown)}"
+    if unknown:
+        raise SystemExit(f"unknown --family values: {sorted(unknown)}")
     if families:
         fam_keys = {k for k, f in fam_map.items() if f in families}
         only = (only & fam_keys) if only else fam_keys

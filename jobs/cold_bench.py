@@ -171,15 +171,13 @@ def phase_query() -> None:
         spans.extend(
             s2real_region_cover(slon, slat, 1200.0, max_level=8, max_cells=48)
         )
-    from linear_quadtree_spark.intervals import merge_spans
+    from linear_quadtree_spark.intervals import merge_spans, spans_sql
 
     merged = merge_spans(spans)
     # ONE SQL text expression, not a chain of Column ops: building the
     # OR-tree via pyspark operators costs ~3 py4j round-trips per span
     # (measured ~1 s for 141 spans); one expr() call costs one
-    cond = F.expr(
-        " OR ".join(f"(sk BETWEEN {lo} AND {hi})" for lo, hi in merged)
-    )
+    cond = F.expr(spans_sql("sk", merged))
     rows["s2real_cap_plan"] = len(merged)
     timings["s2real_cap_plan"] = round(time.time() - t0, 3)
 

@@ -29,6 +29,11 @@ UINT64_MAX = (1 << 64) - 1
 #: deeper than this.
 MAX_SAFE_LEVEL = 16
 
+#: Ranges a key-range cover returns by default (z-order and Hilbert): each
+#: is one BETWEEN that Spark parses, optimizes and code-generates per
+#: query; plans/cover.py gives the measurements behind 16.
+MAX_COVER_RANGES = 16
+
 
 @dataclass(frozen=True)
 class Bounds:

@@ -35,8 +35,10 @@ from the point against the current box midpoint; corruption starts only
 through level ``zlvl + 1``. A range cover decomposed to max level L plus a
 separate scan of the (tiny) ``zlvl < L`` set is therefore a *provably
 conservative* candidate set for any spatial predicate — the query layer
-relies on this invariant. On uniform random data the divergent fraction is
-~2^l·ULP/width per level, i.e. ~0.1% of rows for L=12 with these bounds.
+relies on this invariant. On uniform random data the divergent fraction
+grows ~2^l·ULP/width per level. Measured at L=12 with these bounds, 0.87%
+of rows have ``zlvl < 12``: 874–882 of 100,000 geotag points for each of
+perfbench seeds 0–5 and 603, and 5,240 of 600,000 at sf0.1.
 """
 
 from __future__ import annotations

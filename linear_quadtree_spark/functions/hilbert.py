@@ -31,9 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linear_quadtree_spark.config import Bounds
+from linear_quadtree_spark.config import MAX_COVER_RANGES, Bounds
 from linear_quadtree_spark.functions.geocell import axis_index_expr
 from linear_quadtree_spark.functions.textexpr import DUCK, Eng
+from linear_quadtree_spark.intervals import cap_spans, merge_spans, spans_sql
 
 __all__ = [
     "HILBERT_LEVEL",
@@ -167,8 +168,9 @@ def hilbert_cover_rect(
     level: int = HILBERT_LEVEL,
     max_depth: int | None = None,
 ) -> list[tuple[int, int]]:
-    """Rectangle → merged CLOSED hkey ranges [(lo, hi), ...] covering
-    every grid cell the closed rect intersects.
+    """Rectangle → at most MAX_COVER_RANGES merged CLOSED hkey ranges
+    [(lo, hi), ...] covering every grid cell the closed rect intersects
+    (capped by `intervals.cap_spans`, the zkey cover's budget).
 
     The Hilbert curve is hierarchical: the depth-d index of a cell IS
     the key prefix of every level-L key inside it (d_L(x, y) div
@@ -209,14 +211,7 @@ def hilbert_cover_rect(
                 emit(2 * cx + dx, 2 * cy + dy, d + 1)
 
     emit(0, 0, 0)
-    ranges.sort()
-    merged = [ranges[0]]
-    for lo, hi in ranges[1:]:
-        if lo <= merged[-1][1] + 1:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], hi))
-        else:
-            merged.append((lo, hi))
-    return merged
+    return cap_spans(merge_spans(ranges), MAX_COVER_RANGES)
 
 
 def hilbert_bbox(
@@ -246,8 +241,7 @@ def hilbert_bbox(
     several times, so the collapsed tree grows combinatorially and the
     optimizer stalls for minutes. Cache or save first."""
     cover = hilbert_cover_rect(x0, x1, y0, y1, bounds, level)
-    pred = " OR ".join(f"({key_col} BETWEEN {lo} AND {hi})" for lo, hi in cover)
-    return df.filter(F.expr(pred)).filter(
+    return df.filter(F.expr(spans_sql(key_col, cover))).filter(
         (F.col(x_col).cast("double") >= x0)
         & (F.col(x_col).cast("double") <= x1)
         & (F.col(y_col).cast("double") >= y0)

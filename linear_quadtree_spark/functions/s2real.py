@@ -164,16 +164,12 @@ def _face_uv_np(x, y, z):
     comp = np.choose(axis, [x, y, z])
     face = np.where(comp < 0, axis + 3, axis)
     # ValidFaceXYZtoUV (all six rows, including face 4's v = -x/y).
-    u = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [y / x, -x / y, -x / z, z / x, z / y],
-        default=-y / z,
-    )
-    v = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [z / x, z / y, -y / z, y / x, -x / y],
-        default=-x / z,
-    )
+    # np.select evaluates every row, so the unselected ones divide by the
+    # zero components of axis-aligned points; only their values are dropped.
+    faces = [face == 0, face == 1, face == 2, face == 3, face == 4]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        u = np.select(faces, [y / x, -x / y, -x / z, z / x, z / y], default=-y / z)
+        v = np.select(faces, [z / x, z / y, -y / z, y / x, -x / y], default=-x / z)
     return face.astype(np.int64), u, v
 
 

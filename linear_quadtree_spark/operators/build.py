@@ -35,8 +35,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from linear_quadtree_spark.cache import track
-from linear_quadtree_spark.config import Bounds, DEFAULT_BOUNDS
+from linear_quadtree_spark.config import Bounds, DEFAULT_BOUNDS, MAX_COVER_RANGES
 from linear_quadtree_spark.functions.encode import encode_struct_udf, tile_id_col
+from linear_quadtree_spark.intervals import merge_spans, spans_sql
 from linear_quadtree_spark.plans.cover import ZRange, cover_rect, ranges_to_predicate
 
 __all__ = ["encode_points", "LQTTable", "STORE_SPLIT_LEVEL"]
@@ -333,8 +334,6 @@ class LQTTable:
         near-root range at a deep partition level would otherwise
         materialize millions of ids on the driver and an equally wide
         isin() literal in the plan."""
-        from linear_quadtree_spark.intervals import merge_spans
-
         shift = 64 - 2 * level
         spans = [
             ((r.lo + (1 << 63)) >> shift, (r.hi + (1 << 63)) >> shift)
@@ -359,19 +358,17 @@ class LQTTable:
         row-group pruning / Iceberg file pruning at scale. On a
         partitioned table (load_partitioned) a quad IN (...) predicate
         is added so whole directories prune first."""
-        pred = ranges_to_predicate(ranges, F.col("zs"))
+        pred = ranges_to_predicate(ranges)
         if self.quad_level is not None and self.main_quad is not None:
             runs = self.quad_runs_for_ranges(ranges, self.quad_level)
-            qpred = F.lit(False)
-            for lo, hi in runs:
-                qpred = qpred | F.col("quad").between(lo, hi)
+            qpred = F.expr(spans_sql("quad", runs))
             pruned = self.main_quad.filter(qpred & pred).drop("quad")
         else:
             pruned = self.main.filter(pred)
         return pruned.unionByName(self.side)
 
     def cover(self, x0: float, x1: float, y0: float, y1: float, max_level: int = 10,
-              max_ranges: int = 256) -> list[ZRange]:
+              max_ranges: int = MAX_COVER_RANGES) -> list[ZRange]:
         if max_level > STORE_SPLIT_LEVEL:
             raise ValueError(
                 f"cover level {max_level} exceeds store split level "

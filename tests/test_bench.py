@@ -1,6 +1,7 @@
 """bench.py's record contract, checked without a Spark session: the last
 stdout line stays parseable JSON under 1,500 chars whatever the record
-holds, and a bad --family fails closed before Spark starts."""
+holds, and a bad --family fails closed before Spark starts (in bench.py
+and in jobs/check_oracles.py)."""
 
 import json
 
@@ -67,5 +68,20 @@ def test_unknown_family_fails_closed_before_spark(no_spark, monkeypatch):
         "sys.argv", ["bench.py", "--family=core", "--family=no_such_family"])
     with pytest.raises(SystemExit) as exc:
         bench.main()
+    assert "no_such_family" in str(exc.value)
+    assert "'core'" not in str(exc.value)
+
+
+def test_check_oracles_unknown_family_fails_closed_before_spark(monkeypatch):
+    from jobs import check_oracles
+
+    def refuse(*_a, **_k):
+        raise AssertionError("check_oracles started a Spark session")
+
+    monkeypatch.setattr(check_oracles, "get_spark", refuse)
+    monkeypatch.setattr(
+        "sys.argv", ["check_oracles.py", "--family=core", "--family=no_such_family"])
+    with pytest.raises(SystemExit) as exc:
+        check_oracles.main()
     assert "no_such_family" in str(exc.value)
     assert "'core'" not in str(exc.value)

@@ -40,6 +40,24 @@ KMAX = 1 << S2_MAX_LEVEL
 MAXPOS = (1 << 60) - 1
 
 
+@pytest.mark.filterwarnings("error")
+def test_face_uv_axis_aligned_points_raise_no_warnings():
+    """np.select evaluates all six divisions, so a zero x, y or z
+    component divides by zero in rows it then discards; those warnings
+    are silenced at the source and the chosen (u, v) stay finite."""
+    from linear_quadtree_spark.functions.s2real import _face_uv_np
+
+    # the six face centres, then points with exactly one zero component
+    x = np.array([1.0, 0.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.6, 0.6])
+    y = np.array([0.0, 1.0, 0.0, 0.0, -1.0, 0.0, 0.6, 0.0, 0.8])
+    z = np.array([0.0, 0.0, 1.0, 0.0, 0.0, -1.0, 0.8, 0.8, 0.0])
+    face, u, v = _face_uv_np(x, y, z)
+    assert face.tolist() == [0, 1, 2, 3, 4, 5, 2, 2, 1]
+    assert (u[:6] == 0).all() and (v[:6] == 0).all()
+    assert np.isfinite(u).all() and np.isfinite(v).all()
+    s2real_leaf_np([0.0, 90.0, 180.0, -90.0], [0.0, 0.0, 0.0, 0.0])
+
+
 def test_lookup_tables_mutually_inverse():
     lp, lij = lookup_tables()
     assert len(lp) == len(lij) == 1024
