@@ -341,15 +341,6 @@ class LQTTable:
         ]
         return merge_spans(spans)
 
-    @staticmethod
-    def quads_for_ranges(ranges: list[ZRange], level: int) -> list[int]:
-        """Enumerated form of :meth:`quad_runs_for_ranges` — only safe
-        for coarse partition levels; prefer the runs."""
-        out: list[int] = []
-        for lo, hi in LQTTable.quad_runs_for_ranges(ranges, level):
-            out.extend(range(lo, hi + 1))
-        return out
-
     # ------------------------------------------------------------- candidates
     def candidates(self, ranges: list[ZRange]) -> DataFrame:
         """Conservative candidate rows for a predicate whose cover is

@@ -21,10 +21,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from linear_quadtree_spark.functions.geocell import (
+    _interleave_expr,
+    axis_index_expr,
     cell_axis_expr,
     cell_rect_sql,
     cell_wkt_sql,
 )
+from linear_quadtree_spark.functions.encode import tile_id_col
 from linear_quadtree_spark.functions.textexpr import SPARK
 from linear_quadtree_spark.cache import track
 from linear_quadtree_spark.operators.build import LQTTable, STORE_SPLIT_LEVEL
@@ -82,12 +85,74 @@ _EDGE_CROSSING_SQL = (
 )
 
 
+def _cell_candidates(
+    tbl: LQTTable, probes: DataFrame, cols: list[str], box: tuple, level: int
+) -> DataFrame:
+    """Candidate rows for every probe row's closed box ``(x0, x1, y0, y1)``
+    (Column expressions over ``probes``): the table's columns plus the
+    probe's ``cols``, a superset of the rows inside the box.
+
+    Main rows: each box is fanned out to the level-``level`` cells of the
+    ideal float64 grid with ``explode(sequence)`` per axis, padded one
+    cell per side and clamped into ``[0, 2^level - 1]``, Morton-folded to
+    zkey prefixes and broadcast equi-joined on ``zkey >>> (64-2L)``. Side
+    rows (prefix-unfaithful, tiny): a broadcast join on the box itself.
+
+    Conservativeness: main-table rows are prefix-faithful to the
+    *float32 descent grid* (encode.py); this enumerates the *ideal*
+    float64 grid padded by one cell per side. The float32 grid's
+    boundaries deviate from ideal by < level·ULP(coordinate) ≈ 1.5e-3,
+    orders of magnitude under one cell width at any level ≤
+    STORE_SPLIT_LEVEL, so the pad strictly covers the deviation. Level 0
+    is refused: its shift 64 is masked to 0 by the JVM, so the join key
+    would be the whole zkey and match almost nothing."""
+    if not 1 <= level <= STORE_SPLIT_LEVEL:
+        raise ValueError(f"cell level must be in [1, {STORE_SPLIT_LEVEL}], got {level}")
+    b = tbl.bounds
+    n_cells = 1 << level
+    cw = (b.xend - b.xstart) / n_cells
+    ch = (b.yend - b.ystart) / n_cells
+    x0, x1, y0, y1 = box
+
+    def _clamp(c):
+        return F.greatest(F.lit(0).cast("long"), F.least(F.lit(n_cells - 1).cast("long"), c))
+
+    def _axis(lo, hi, start: float, w: float):
+        # clamp BOTH ends into [0, n-1]: a box outside the domain
+        # otherwise leaves lo unbounded above (or hi below), and Spark's
+        # sequence(start, stop) with start > stop counts DOWN — a far
+        # out-of-domain probe would try to materialize a billion-element
+        # index array (regression-tested)
+        return F.explode(F.sequence(
+            _clamp(F.floor((lo - F.lit(start)) / F.lit(w)) - 1),
+            _clamp(F.floor((hi - F.lit(start)) / F.lit(w)) + 1),
+        ))
+
+    # cell prefixes and shiftrightunsigned(zkey) are both plain
+    # non-negative longs — no sign-flip needed on the equi-join key
+    cells = (
+        probes.withColumn("ix", _axis(x0, x1, b.xstart, cw))
+        .withColumn("iy", _axis(y0, y1, b.ystart, ch))
+        .withColumn("cell", F.expr(_interleave_expr(SPARK, "(ix)", "(iy)", level)))
+        .select(*cols, "cell")
+    )
+    cand_main = (
+        tbl.main.withColumn("_cell", tile_id_col(F.col("zkey"), level))
+        .join(F.broadcast(cells), F.col("_cell") == F.col("cell"), "inner")
+        .drop("_cell", "cell")
+    )
+    xc, yc = F.col(tbl.x_col), F.col(tbl.y_col)
+    cand_side = tbl.side.join(
+        F.broadcast(probes), (xc >= x0) & (xc <= x1) & (yc >= y0) & (yc <= y1), "inner"
+    ).select(*tbl.side.columns, *cols)
+    return cand_main.unionByName(cand_side)
+
+
 def point_in_polygon_join(
     tbl: LQTTable,
     polygons: DataFrame,
     level: int = 8,
     max_cells_per_poly: int = 4096,
-    refine: str = "fold",
 ) -> DataFrame:
     """Join: every (point row, poly_id) with the point strictly inside the
     polygon (even-odd rule).
@@ -98,31 +163,20 @@ def point_in_polygon_join(
 
     1. per-polygon bbox via ``array_min/array_max`` column expressions;
     2. ONE scalar pair to the driver (the widest bbox extents) picks the
-       shared cover level L ≤ min(level, STORE_SPLIT_LEVEL) such that the
-       widest polygon's padded cover fits ``max_cells_per_poly``;
-    3. bbox → cell fan-out with ``explode(sequence) × explode(sequence)``
-       over the ideal float64 grid padded ONE cell per side, Morton-folded
-       to zkey prefixes — the same enumeration (and the same
-       conservativeness contract vs the float32 descent grid, see
-       ``_grid_cells_df``) the kNN operator uses;
-    4. **broadcast hash equi-join** on ``cell = zkey >>> (64-2L)`` (AQE
-       can skew-split hot cells); the tiny prefix-unfaithful side relation
-       joins per-polygon bboxes by broadcast nested loop;
-    5. exact even-odd refine with ZERO Python and the oracle's exact
-       arithmetic, two interchangeable physical shapes:
-
-       * ``refine="fold"`` (default): edges aggregated per polygon into an
-         array column, broadcast-joined to candidates, crossing parity via
-         an ``aggregate()`` HOF — map-only, no extra shuffle; right while
-         per-polygon vertex counts are broadcastable (≤ ~10^3 vertices ×
-         10^4 polygons);
-       * ``refine="edges"``: edges exploded to rows, broadcast equi-join
-         on poly_id, ONE hash aggregate of crossing parity per (candidate,
-         polygon) with map-side combine — the `rasterize_polygons` shape;
-         use for very large rings where edge arrays shouldn't ride rows.
+       shared cover level 1 ≤ L ≤ min(level, STORE_SPLIT_LEVEL) such that
+       the widest polygon's padded cover fits ``max_cells_per_poly``;
+    3. bbox → candidate rows through ``_cell_candidates``, the cell
+       fan-out and broadcast equi-join on ``cell = zkey >>> (64-2L)``
+       (AQE can skew-split hot cells) the kNN operator uses too;
+    4. exact even-odd refine with ZERO Python and the oracle's exact
+       arithmetic: edges aggregated per polygon into an array column,
+       broadcast-joined to candidates, crossing parity via an
+       ``aggregate()`` fold — map-only, no extra shuffle; right while
+       per-polygon vertex counts are broadcastable (≤ ~10^3 vertices ×
+       10^4 polygons).
     """
-    if refine not in ("fold", "edges"):
-        raise ValueError("refine must be 'fold' or 'edges'")
+    if level < 1:
+        raise ValueError(f"level must be >= 1, got {level}")
     b = tbl.bounds
     bw, bh = b.xend - b.xstart, b.yend - b.ystart
 
@@ -152,164 +206,26 @@ def point_in_polygon_join(
                 break
             shared_level -= 1
 
-    n_cells = 1 << shared_level
-    cw, ch = bw / n_cells, bh / n_cells
-
-    def _clamp(c):
-        return F.greatest(F.lit(0).cast("long"), F.least(F.lit(n_cells - 1).cast("long"), c))
-
-    # cell prefixes and shiftrightunsigned(zkey) are both plain
-    # non-negative longs — no sign-flip needed on the equi-join key
-    cells_df = (
-        pb.withColumn(
-            "ix",
-            F.explode(
-                F.sequence(
-                    _clamp(F.floor((F.col("bx0") - F.lit(b.xstart)) / F.lit(cw)) - 1),
-                    _clamp(F.floor((F.col("bx1") - F.lit(b.xstart)) / F.lit(cw)) + 1),
-                )
-            ),
-        )
-        .withColumn(
-            "iy",
-            F.explode(
-                F.sequence(
-                    _clamp(F.floor((F.col("by0") - F.lit(b.ystart)) / F.lit(ch)) - 1),
-                    _clamp(F.floor((F.col("by1") - F.lit(b.ystart)) / F.lit(ch)) + 1),
-                )
-            ),
-        )
-        .withColumn("cell", F.expr(_interleave_expr("ix", "iy", shared_level)))
-        .select("poly_id", "cell")
-    )
-
-    shift = 64 - 2 * shared_level
-    cand_main = (
-        tbl.main.withColumn("_cell", F.shiftrightunsigned(F.col("zkey"), shift))
-        .join(F.broadcast(cells_df), F.col("_cell") == F.col("cell"), "inner")
-        .drop("_cell", "cell")
-    )
-
-    # side relation: tiny → broadcast nested-loop against per-poly bboxes
+    box = (F.col("bx0"), F.col("bx1"), F.col("by0"), F.col("by1"))
     xc, yc = F.col(tbl.x_col), F.col(tbl.y_col)
-    bbox_df = pb.select("poly_id", "bx0", "bx1", "by0", "by1")
-    cand_side = tbl.side.join(
-        F.broadcast(bbox_df),
-        (xc >= F.col("bx0")) & (xc <= F.col("bx1")) & (yc >= F.col("by0")) & (yc <= F.col("by1")),
-        "inner",
-    ).drop("bx0", "bx1", "by0", "by1")
-
     cand = (
-        cand_main.unionByName(cand_side)
+        _cell_candidates(tbl, pb, ["poly_id"], box, shared_level)
         .withColumn("_px", xc.cast("double"))
         .withColumn("_py", yc.cast("double"))
     )
     out_cols = [c for c in cand.columns if c not in ("_px", "_py")]
-
-    if refine == "fold":
-        edge_arr = (
-            "transform(sequence(0, size(xs) - 1), i -> named_struct("
-            "'x1v', xs[i], 'y1v', ys[i], "
-            "'x2v', xs[(i + 1) % size(xs)], 'y2v', ys[(i + 1) % size(ys)]))"
-        )
-        poly_edges = polygons.select("poly_id", F.expr(edge_arr).alias("_edges"))
-        cr = _EDGE_CROSSING_SQL.format(x1="e.x1v", y1="e.y1v", x2="e.x2v", y2="e.y2v")
-        parity = (
-            f"aggregate(_edges, CAST(0 AS BIGINT), (acc, e) -> acc + ({cr})) % 2 = 1"
-        )
-        return (
-            cand.join(F.broadcast(poly_edges), "poly_id")
-            .filter(F.expr(parity))
-            .select(*out_cols)
-        )
-
-    edges = (
-        polygons.select("poly_id", "xs", "ys", F.posexplode("xs").alias("pos", "x1v"))
-        .select(
-            "poly_id",
-            "x1v",
-            F.expr("ys[pos]").alias("y1v"),
-            F.expr("xs[(pos + 1) % size(xs)]").alias("x2v"),
-            F.expr("ys[(pos + 1) % size(ys)]").alias("y2v"),
-        )
+    edge_arr = (
+        "transform(sequence(0, size(xs) - 1), i -> named_struct("
+        "'x1v', xs[i], 'y1v', ys[i], "
+        "'x2v', xs[(i + 1) % size(xs)], 'y2v', ys[(i + 1) % size(ys)]))"
     )
-    cr = _EDGE_CROSSING_SQL.format(x1="x1v", y1="y1v", x2="x2v", y2="y2v")
-    # parity is computed per DISTINCT candidate row, then a semi join
-    # restores multiplicity: grouping the raw candidates directly would
-    # merge fully-duplicate rows (tables built without a tiebreaker)
-    # and double their crossing counts — always-even parity, duplicates
-    # silently dropped (regression-tested vs refine='fold')
-    distinct_cand = cand.dropDuplicates(out_cols)
-    inside = (
-        distinct_cand.join(F.broadcast(edges), "poly_id")
-        .withColumn("_cr", F.expr(cr))
-        .groupBy(*out_cols)
-        .agg(F.sum("_cr").alias("_crossings"))
-        .filter(F.col("_crossings") % 2 == 1)
-        .select(*out_cols)
-    )
-    return cand.select(*out_cols).join(inside, out_cols, "left_semi")
-
-
-def _interleave_expr(ix: str, iy: str, level: int) -> str:
-    """Morton-interleave two level-``level`` grid indices into a zkey
-    prefix — delegates to the engine-generic geocell interleave (ONE
-    bit-algebra implementation in the package; equivalence probed
-    before the consolidation)."""
-    from linear_quadtree_spark.functions.geocell import (
-        _interleave_expr as _geocell_interleave,
-    )
-    from linear_quadtree_spark.functions.textexpr import SPARK as _SENG
-
-    return _geocell_interleave(_SENG, f"({ix})", f"({iy})", level)
-
-
-def _grid_cells_df(unresolved: DataFrame, bounds, level: int) -> DataFrame:
-    """(qid, qx, qy, r, cell): all level-``level`` grid cells whose closure
-    can intersect the per-query r-square (``r`` is a COLUMN of
-    ``unresolved`` — each query carries its own radius) — enumerated with
-    DataFrame expressions (sequence + explode + Morton fold), so the
-    query table never visits the driver.
-
-    Conservativeness: main-table rows are prefix-faithful to the
-    *float32 descent grid* (encode.py); this enumerates the *ideal*
-    float64 grid padded by one cell per side. The float32 grid's
-    boundaries deviate from ideal by < level·ULP(coordinate) ≈ 1.5e-3,
-    orders of magnitude under one cell width at any level ≤
-    STORE_SPLIT_LEVEL, so the pad strictly covers the deviation."""
-    n_cells = 1 << level
-    cw = (bounds.xend - bounds.xstart) / n_cells
-    ch = (bounds.yend - bounds.ystart) / n_cells
-
-    def _clamp(c):
-        # clamp BOTH ends into [0, n-1]: a query point outside the
-        # domain otherwise leaves lo unbounded above (or hi below), and
-        # Spark's sequence(start, stop) with start > stop counts DOWN —
-        # a far out-of-domain point would try to materialize a
-        # billion-element index array (regression-tested)
-        return F.greatest(
-            F.lit(0).cast("long"), F.least(F.lit(n_cells - 1).cast("long"), c)
-        )
-
-    def _lo(coord: str, start: float, w: float):
-        return _clamp(
-            F.floor((F.col(coord) - F.col("r") - F.lit(start)) / F.lit(w)) - 1
-        )
-
-    def _hi(coord: str, start: float, w: float):
-        return _clamp(
-            F.floor((F.col(coord) + F.col("r") - F.lit(start)) / F.lit(w)) + 1
-        )
-
+    poly_edges = polygons.select("poly_id", F.expr(edge_arr).alias("_edges"))
+    cr = _EDGE_CROSSING_SQL.format(x1="e.x1v", y1="e.y1v", x2="e.x2v", y2="e.y2v")
+    parity = f"aggregate(_edges, CAST(0 AS BIGINT), (acc, e) -> acc + ({cr})) % 2 = 1"
     return (
-        unresolved.withColumn(
-            "ix", F.explode(F.sequence(_lo("qx", bounds.xstart, cw), _hi("qx", bounds.xstart, cw)))
-        )
-        .withColumn(
-            "iy", F.explode(F.sequence(_lo("qy", bounds.ystart, ch), _hi("qy", bounds.ystart, ch)))
-        )
-        .withColumn("cell", F.expr(_interleave_expr("ix", "iy", level)))
-        .select("qid", "qx", "qy", "r", "cell")
+        cand.join(F.broadcast(poly_edges), "poly_id")
+        .filter(F.expr(parity))
+        .select(*out_cols)
     )
 
 
@@ -328,10 +244,10 @@ def knn_join(
     round counter and one stats row (count, min r, max r) per round.
 
     PER-QUERY adaptive radius (round-3): ``r`` is a COLUMN of the
-    unresolved set. Per round: enumerate the level-L grid cells covering
-    each query's own r-square, broadcast equi-join against
-    ``zkey >>> (64-2L)`` on the main relation + a bbox broadcast join
-    against the tiny side relation, keep candidates with dist² ≤ r²,
+    unresolved set. Per round: ``_cell_candidates`` fans each query's own
+    r-square out to level-L grid cells, broadcast equi-joined against
+    ``zkey >>> (64-2L)`` on the main relation (+ a box broadcast join
+    against the tiny side relation); keep candidates with dist² ≤ r²,
     window top-k per query. A query resolves when it has ≥ k candidates
     within its r: the square covers the full r-disk, so nothing outside
     can beat the k-th hit — exactness is unconditional regardless of the
@@ -417,24 +333,12 @@ def knn_join(
         # smallest radius (tight pruning), capped 3 levels below the level
         # of the largest (bounds the widest query's fan-out at ~19² cells)
         lvl = max(1, min(_lvl_for(r_min), _lvl_for(r_max) + 3))
-        shift = 64 - 2 * lvl
-        cells = _grid_cells_df(unresolved, tbl.bounds, lvl)
-
-        cand_main = (
-            tbl.main.withColumn("_cell", F.shiftrightunsigned(F.col("zkey"), shift))
-            .join(F.broadcast(cells), F.col("_cell") == F.col("cell"), "inner")
-            .drop("_cell", "cell")
-        )
-        cand_side = tbl.side.join(
-            F.broadcast(unresolved.drop("maxr")),
-            (xc >= F.col("qx") - F.col("r")) & (xc <= F.col("qx") + F.col("r"))
-            & (yc >= F.col("qy") - F.col("r")) & (yc <= F.col("qy") + F.col("r")),
-            "inner",
-        )
-        dx = xc.cast("double") - F.col("qx")
-        dy = yc.cast("double") - F.col("qy")
+        qx, qy, r = F.col("qx"), F.col("qy"), F.col("r")
+        box = (qx - r, qx + r, qy - r, qy + r)
+        dx = xc.cast("double") - qx
+        dy = yc.cast("double") - qy
         cand = (
-            cand_main.unionByName(cand_side)
+            _cell_candidates(tbl, unresolved, ["qid", "qx", "qy", "r"], box, lvl)
             .withColumn("dist2", dx * dx + dy * dy)
             .filter(F.col("dist2") <= F.col("r") * F.col("r"))
             .drop("r")
@@ -714,13 +618,12 @@ def occupancy_hist(tbl: LQTTable, level: int) -> DataFrame:
     UDF: cell = top ``2*level`` bits of the raw zkey, reference key
     semantics including collapsed keys. Shuffle sizes are the number of
     OCCUPIED CELLS then the number of DISTINCT OCCUPANCIES — both far
-    below row count at any scale.
+    below row count at any scale. ``level`` must be in 1..31: the JVM
+    masks a shift by 64 to 0, so level 0 would count distinct zkeys.
     """
     full = tbl.main.unionByName(tbl.side)
     per_cell = (
-        full.withColumn(
-            "cell", F.shiftrightunsigned(F.col("zkey"), 64 - 2 * level)
-        )
+        full.withColumn("cell", tile_id_col(F.col("zkey"), level))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_points"))
     )
@@ -847,10 +750,6 @@ def rasterize_polygons(
     tx, ty), one row per covered tile.
     """
     from linear_quadtree_spark.config import DEFAULT_BOUNDS
-    from linear_quadtree_spark.functions.geocell import (
-        _interleave_expr,
-        axis_index_expr,
-    )
 
     b = bounds or DEFAULT_BOUNDS
     n = 1 << zoom
@@ -921,10 +820,6 @@ def _rasterize_ctes_duck(edges_cte: str, zoom: int, bounds=None) -> str:
     keep querying the raster, where the bare final SELECT of
     `rasterize_polygons_sql_duck` could not be extended."""
     from linear_quadtree_spark.config import DEFAULT_BOUNDS
-    from linear_quadtree_spark.functions.geocell import (
-        _interleave_expr,
-        axis_index_expr,
-    )
     from linear_quadtree_spark.functions.textexpr import DUCK
 
     b = bounds or DEFAULT_BOUNDS
@@ -1266,8 +1161,6 @@ def tile_coverage_gaps(
     lattice with the same driver-computed clamped range.
 
     Output per gap tile: (tile_id, tx, ty)."""
-    from linear_quadtree_spark.functions.geocell import _interleave_expr
-
     tx0, tx1, ty0, ty1 = _bbox_tile_range(tbl.bounds, zoom, x0, y0, x1, y1)
     ntx, nty = tx1 - tx0 + 1, ty1 - ty0 + 1
     spark = tbl.main.sparkSession
@@ -1296,10 +1189,6 @@ def tile_coverage_gaps_sql_duck(
     same div/mod enumeration over ``range()``, NOT EXISTS against the
     reference-prefix occupied set. Embed after a CTE chain providing
     ``refenc(pref)``."""
-    from linear_quadtree_spark.functions.geocell import (
-        _interleave_expr,
-        cell_axis_expr,
-    )
     from linear_quadtree_spark.functions.textexpr import DUCK
 
     tx0, tx1, ty0, ty1 = _bbox_tile_range(bounds, zoom, x0, y0, x1, y1)

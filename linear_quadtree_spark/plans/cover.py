@@ -39,7 +39,7 @@ import numpy as np
 from linear_quadtree_spark.config import DEPTH, MAX_COVER_RANGES, MAX_SAFE_LEVEL, SIGN_BIT, Bounds
 from linear_quadtree_spark.intervals import cap_spans, merge_spans, spans_sql
 
-__all__ = ["ZRange", "cover_rect", "cover_cells", "ranges_to_predicate", "merge_ranges"]
+__all__ = ["ZRange", "cover_rect", "ranges_to_predicate"]
 
 _I64 = (1 << 64) - 1
 #: cells the breadth-first walk may hold before it stops refining; bounds
@@ -59,15 +59,6 @@ class ZRange:
 
     lo: int
     hi: int
-
-
-def merge_ranges(ranges: list[ZRange]) -> list[ZRange]:
-    """Coalesce adjacent/overlapping closed ranges (z-order rect covers are
-    full of contiguous quadrants) — a ZRange-typed wrapper over the
-    package-wide `intervals.merge_spans`."""
-    return [
-        ZRange(lo, hi) for lo, hi in merge_spans((r.lo, r.hi) for r in ranges)
-    ]
 
 
 def cover_rect(
@@ -152,73 +143,6 @@ def cover_rect(
         emit(prefix, max_level)
 
     return [ZRange(lo, hi) for lo, hi in cap_spans(merge_spans(out), max_ranges)]
-
-
-def cover_cells(
-    x0: float,
-    x1: float,
-    y0: float,
-    y1: float,
-    bounds: Bounds,
-    level: int,
-    max_cells: int = 8192,
-) -> tuple[int, list[int]]:
-    """Enumerate ALL grid cells (zkey prefixes) at one uniform level whose
-    closure intersects the closed rect — the side relation of a grid-cell
-    *equi-join* (``zkey >>> (64-2L) == prefix``), which Spark executes as a
-    broadcast hash join instead of a nested-loop range join.
-
-    Unlike cover_rect this is O(area/cell²), so the level auto-coarsens
-    until the cell count fits ``max_cells``. Returns ``(level, prefixes)``.
-    Same conservativeness contract as cover_rect for rows with
-    ``zlvl >= level``.
-    """
-    if level > MAX_SAFE_LEVEL:
-        raise ValueError(f"level must be <= {MAX_SAFE_LEVEL}")
-    if x1 < x0 or y1 < y0:
-        return level, []
-    f32 = np.float32
-    two = f32(2.0)
-    qx0, qx1, qy0, qy1 = float(x0), float(x1), float(y0), float(y1)
-
-    while True:
-        cells: list[int] = []
-        frontier = [
-            (0, f32(bounds.xstart), f32(bounds.xend), f32(bounds.ystart), f32(bounds.yend))
-        ]
-        blown = False
-        for lv in range(level):
-            nxt: list[tuple] = []
-            for prefix, cxs, cxe, cys, cye in frontier:
-                nw = (cxe - cxs) / two
-                nh = (cye - cys) / two
-                midx = cxs + nw
-                midy = cys + nh
-                xiv = ((cxs, midx), (midx, midx + nw))
-                yiv = ((cys, midy), (midy, midy + nh))
-                for by in (0, 1):
-                    ylo, yhi = yiv[by]
-                    if yhi < qy0 or ylo > qy1:
-                        continue
-                    for bx in (0, 1):
-                        xlo, xhi = xiv[bx]
-                        if xhi < qx0 or xlo > qx1:
-                            continue
-                        nxt.append(((prefix << 2) | (by << 1) | bx, xlo, xhi, ylo, yhi))
-            if len(nxt) > max_cells:
-                blown = True
-                break
-            frontier = nxt
-        if not blown:
-            return level, [p for p, *_ in frontier]
-        level -= 1
-        if level <= 0:
-            # NEVER return level 0: the documented equi-join key is
-            # zkey >>> (64 - 2L), and the JVM masks shift distances
-            # mod 64, so >>> 64 is the identity — a level-0 "prefix 0"
-            # would match only zkey == 0. Four level-1 quads cover the
-            # whole domain and shift by the valid 62.
-            return 1, [0, 1, 2, 3]
 
 
 def ranges_to_predicate(ranges: list[ZRange], zs_col="zs"):

@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 from linear_quadtree_spark.config import DEFAULT_BOUNDS
 from linear_quadtree_spark.functions.encode import zorder_encode_np, zs_from_zkey
 from linear_quadtree_spark.intervals import cap_spans, spans_sql
-from linear_quadtree_spark.plans.cover import ZRange, cover_rect, merge_ranges
+from linear_quadtree_spark.plans.cover import cover_rect
 
 pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
 
@@ -145,11 +145,6 @@ def test_bbox_query_exact_under_any_budget(cover_tbl, max_ranges, monkeypatch):
     assert len(cover_rect(*BBOX_X3[0], DEFAULT_BOUNDS, max_ranges=1 << 30)) > 16
 
 
-def test_merge_ranges():
-    rs = [ZRange(0, 4), ZRange(5, 9), ZRange(20, 30), ZRange(25, 27)]
-    assert merge_ranges(rs) == [ZRange(0, 9), ZRange(20, 30)]
-
-
 def test_merge_spans():
     from linear_quadtree_spark.intervals import merge_spans
 
@@ -162,22 +157,3 @@ def test_merge_spans():
 
 def test_empty_rect():
     assert cover_rect(10, 5, 0, 1, DEFAULT_BOUNDS) == []
-
-
-def test_cover_cells_never_returns_level_zero():
-    """Coarsening floor is level 1 (four quads): at level 0 the
-    documented equi-join shift 64-2L is 64, which the JVM masks to 0 —
-    'prefix 0' would match only zkey == 0 (regression)."""
-    from linear_quadtree_spark.config import DEFAULT_BOUNDS
-    from linear_quadtree_spark.plans.cover import cover_cells
-
-    lvl, cells = cover_cells(
-        DEFAULT_BOUNDS.xstart,
-        DEFAULT_BOUNDS.xend,
-        DEFAULT_BOUNDS.ystart,
-        DEFAULT_BOUNDS.yend,
-        DEFAULT_BOUNDS,
-        level=10,
-        max_cells=2,
-    )
-    assert lvl == 1 and cells == [0, 1, 2, 3]

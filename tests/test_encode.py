@@ -10,6 +10,8 @@ from linear_quadtree_spark.functions.encode import (
     zs_from_zkey,
 )
 
+pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
+
 # FIXTURES.md F2 golden rows (empirically verified against the compiled
 # reference: 0 mismatches on 108k points incl. exact grid-boundary values).
 GOLDEN = [

@@ -440,7 +440,7 @@ def test_partitioned_table_prunes_directories(spark, tmp_path):
     seg = plan.split("PartitionFilters", 1)
     assert len(seg) == 2 and "quad" in seg[1][:300]
     # the quad set for this rect is a single directory
-    assert loaded.quads_for_ranges(loaded.cover(*rect), 1) == [0]
+    assert loaded.quad_runs_for_ranges(loaded.cover(*rect), 1) == [(0, 0)]
     # result parity with the unpartitioned path
     exp = sorted(r.pid for r in bbox_query(t, *rect).collect())
     got = sorted(r.pid for r in out.collect())

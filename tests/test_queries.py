@@ -17,6 +17,8 @@ from linear_quadtree_spark.operators.spatial import (
 from linear_quadtree_spark.functions.geometry import point_in_polygon_np
 from linear_quadtree_spark.sources.synth import knn_queries_df, polygons_df
 
+pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
+
 
 @pytest.fixture(scope="module")
 def points_pdf():
@@ -75,12 +77,14 @@ def test_bbox_matches_bruteforce(tbl, points_pdf, rect, spark):
     assert got == exp
 
 
-@pytest.mark.parametrize("refine", ["fold", "edges"])
-def test_pip_join_matches_bruteforce(tbl, points_pdf, spark, refine):
+# a padded cover spans at least 3x3 cells, so a budget of 1 forces the
+# coarsest cover level, 1
+@pytest.mark.parametrize("max_cells_per_poly", [4096, 1])
+def test_pip_join_matches_bruteforce(tbl, points_pdf, spark, max_cells_per_poly):
     polys = polygons_df(spark, 8)
     got = {
         (r.key, r.poly_id)
-        for r in point_in_polygon_join(tbl, polys, refine=refine)
+        for r in point_in_polygon_join(tbl, polys, max_cells_per_poly=max_cells_per_poly)
         .select("key", "poly_id")
         .collect()
     }
@@ -280,6 +284,15 @@ def test_knn_empty_queries(tbl, spark):
     assert out.count() == 0
 
 
+def test_occupancy_hist_level_zero_raises(tbl):
+    """A level-0 cell would be zkey >>> 64, which the JVM masks to the
+    whole zkey: one 'cell' per distinct key instead of one for all."""
+    from linear_quadtree_spark.operators.spatial import occupancy_hist
+
+    with pytest.raises(ValueError, match="zoom"):
+        occupancy_hist(tbl, 0)
+
+
 def test_occupancy_hist_reconciles(tbl, points_pdf):
     """Occupancy histogram invariants: sum(k * n_cells(k)) == row count,
     cell count matches a direct distinct-prefix count, and the histogram
@@ -292,8 +305,8 @@ def test_occupancy_hist_reconciles(tbl, points_pdf):
 
     full = tbl.main.unionByName(tbl.side)
     zkeys = np.array(
-        [r.zkey for r in full.select("zkey").collect()], dtype=np.uint64
-    )
+        [r.zkey for r in full.select("zkey").collect()], dtype=np.int64
+    ).view(np.uint64)
     cells = zkeys >> np.uint64(64 - 2 * level)
     _, counts = np.unique(cells, return_counts=True)
     expect_cells = len(counts)
@@ -405,11 +418,11 @@ def test_knn_out_of_domain_query_is_safe(spark, sf_dir):
     assert {r.doc_id for r in by_q[0]} == {r.doc_id for r in exp}
 
 
-def test_pip_edges_mode_keeps_duplicate_rows(spark):
-    """Tables without a unique key can hold fully duplicate rows; both
-    refine modes must return them all (regression: edges mode grouped
-    duplicates together, doubling crossing counts — even parity, rows
-    dropped)."""
+def test_pip_join_keeps_duplicate_rows(spark):
+    """Tables without a unique key can hold fully duplicate rows; the
+    join must return each of them (a refine that groups candidate rows
+    would merge duplicates and double their crossing counts — even
+    parity, rows dropped)."""
     from linear_quadtree_spark.config import DEFAULT_BOUNDS
     from linear_quadtree_spark.operators.build import LQTTable
     from linear_quadtree_spark.operators.spatial import point_in_polygon_join
@@ -423,9 +436,21 @@ def test_pip_edges_mode_keeps_duplicate_rows(spark):
         [(0, [1040.0, 1060.0, 1060.0, 1040.0], [1040.0, 1040.0, 1060.0, 1060.0])],
         "poly_id int, xs array<double>, ys array<double>",
     )
-    fold = point_in_polygon_join(tbl, poly, refine="fold").count()
-    edges = point_in_polygon_join(tbl, poly, refine="edges").count()
-    assert fold == edges == 2
+    assert point_in_polygon_join(tbl, poly).count() == 2
+
+
+def test_pip_join_level_zero_raises(tbl, spark):
+    """Level 0 would shift zkeys by 64, which the JVM masks to 0: the
+    cell join key becomes the whole zkey and silently drops rows."""
+    from linear_quadtree_spark.operators.build import STORE_SPLIT_LEVEL
+    from linear_quadtree_spark.operators.spatial import _cell_candidates
+
+    with pytest.raises(ValueError, match="level"):
+        point_in_polygon_join(tbl, polygons_df(spark, 2), level=0)
+    box = (F.col("qx"), F.col("qx"), F.col("qy"), F.col("qy"))
+    for bad in (0, STORE_SPLIT_LEVEL + 1):
+        with pytest.raises(ValueError, match="cell level"):
+            _cell_candidates(tbl, tbl.main, [], box, bad)
 
 
 def test_distance_join_requires_unique_id(spark):

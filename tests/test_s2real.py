@@ -36,6 +36,8 @@ from linear_quadtree_spark.functions.s2real import (
 )
 from linear_quadtree_spark.functions.textexpr import DUCK, SPARK
 
+pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
+
 KMAX = 1 << S2_MAX_LEVEL
 MAXPOS = (1 << 60) - 1
 
