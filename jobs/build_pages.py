@@ -46,7 +46,6 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--out", required=True)
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--bbox", default="1020,1045,1030,1070")
     ap.add_argument(
         "--partition-level", type=int, default=None,
@@ -83,7 +82,6 @@ def main() -> None:
             DEFAULT_BOUNDS,
             tiebreaker="doc_id",
             num_partitions=args.partitions,
-            salt=args.salt,
             persist=False,
         )
         if args.partition_level is not None:

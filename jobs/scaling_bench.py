@@ -460,8 +460,10 @@ parallel work term W scaling at ≈ 1.0. F alone caps a 10M-row pair at
 ~0.82. The end-to-end number is an Amdahl artifact of benchmark
 DURATION, not of the plan: at production scale (hours-long builds of
 10^12 rows) F is ~0.01% of T and end-to-end efficiency converges to the
-work term. The independently measured phase decomposition
-(jobs/phase_probe.py, adjacent quiet windows, 40M rows) shows the
+work term. The independently measured phase decomposition (adjacent
+quiet windows, 40M rows; the probe that took it is deleted, and
+`perfbench/run.py --trace 1` now reports the build's encode, shuffle
+and sort time) shows the
 embarrassingly-parallel encode phase scaling at 0.70 and the
 shuffle+sort phase at 0.65 from 2 to 8 cores, consistent with the same
 ~5 s fixed term.

@@ -6,7 +6,7 @@ Reference pipelines (`lqt_create*`, SURVEY §2.5) are all
 (lqt.cu:122-156): slice input into memory-sized blocks, encode+sort each,
 k-way merge. In Spark:
 
-* block planning (lqt.cu:127-139)   → ``repartitionByRange(N, zs)``
+* block planning (lqt.cu:127-139)   → ``repartitionByRange(N, zs, tiebreaker)``
   (RangePartitioner IS the reference's own samplesort, samplesort.hh:53-120:
   sample → splitters → scatter → per-bin sort);
 * per-block encode+sort             → pandas-UDF encode stage +
@@ -18,11 +18,11 @@ Tie semantics: the reference orders by location only, ties impl-defined
 across its six sorters (SURVEY §2.3a); we always sort ``(zs, tiebreaker)``
 for reproducibility.
 
-Skew: midline collapse (SURVEY §1.3) plus real-world hot cells concentrate
-equal zs values; RangePartitioner cannot split equal keys, so builds can
-optionally salt the range key with a deterministic hash of the payload id,
-which splits equal-zs runs across partitions while keeping global zs order
-across partition boundaries.
+Skew: the range key is the sort key, ``(zs, tiebreaker)``, as in the
+reference's samplesort, whose splitters sample the whole key. A hot cell's
+run of equal zs then splits wherever the sampled bounds fall inside it,
+and partition order stays global ``(zs, tiebreaker)`` order. Midline-
+collapsed rows (SURVEY §1.3) never reach it: they go to the side relation.
 """
 
 from __future__ import annotations
@@ -72,7 +72,7 @@ def encode_points(
 class LQTTable:
     """A built linear quadtree over an arbitrary payload DataFrame.
 
-    ``main``: zs-range-partitioned, (zs, tiebreaker)-sorted rows with
+    ``main``: (zs, tiebreaker)-range-partitioned and -sorted rows with
     zlvl >= STORE_SPLIT_LEVEL — the reference's sorted key/point array
     (lqt.h:21-25), distributed.
     ``side``: the prefix-unfaithful residue (midline collapse, out-of-
@@ -126,17 +126,10 @@ class LQTTable:
         y_col: str = "y",
         tiebreaker: str | None = None,
         num_partitions: int | None = None,
-        salt: int | str = 0,
         persist: bool = True,
         eager_count: bool = True,
     ) -> "LQTTable":
         """Encode + range-partition + sort — `lqt_create_cuda` re-expressed.
-
-        ``salt > 0`` adds a deterministic payload-hash salt as a secondary
-        range key: equal-zs runs (hot cells / midline collapse) split
-        across up to ``salt`` partitions instead of hot-spotting one.
-        ``salt="auto"`` samples the encoded keys for hot-key mass first
-        and picks the salt width itself (one extra small job).
 
         ``eager_count=False`` skips the up-front count() action: the
         RangePartitioner's sampling pass then doubles as the cache
@@ -170,7 +163,7 @@ class LQTTable:
         main = enc.filter(F.col("zlvl") >= STORE_SPLIT_LEVEL)
         side = enc.filter(F.col("zlvl") < STORE_SPLIT_LEVEL)
 
-        sort_cols = ["zs"] + ([tiebreaker] if tiebreaker else [])
+        key = ["zs"] + ([tiebreaker] if tiebreaker else [])
         if num_partitions is None:
             # 2 partitions per core: one-task-per-slot waves convoy on
             # Python-worker startup and leave no room for stragglers; at
@@ -178,28 +171,11 @@ class LQTTable:
             # (~input_bytes / 256 MB), which the caller passes explicitly.
             num_partitions = max(2 * df.sparkSession.sparkContext.defaultParallelism, 2)
         if num_partitions == 1:
-            # small-input fast path (the reference's single-block
-            # lqt_create_cuda_noblock, lqt.cu:159-164): one partition
-            # needs no range boundaries, so skip the RangePartitioner's
-            # sampling job entirely — coalesce + one local sort. Salt
-            # resolution stays BELOW this branch: one partition never
-            # salts, so running detect_salt's sampling job first would
-            # be a whole Spark job whose answer is ignored.
+            # one block needs no range bounds: no sampling job (lqt.cu:159-164)
             main = main.coalesce(1)
         else:
-            if salt == "auto":
-                salt = cls.detect_salt(enc, num_partitions)
-            if salt > 1:
-                tb = tiebreaker or x_col
-                main = main.withColumn(
-                    "_salt", F.pmod(F.xxhash64(F.col(tb)), F.lit(salt))
-                )
-                main = main.repartitionByRange(
-                    num_partitions, "zs", "_salt"
-                ).drop("_salt")
-            else:
-                main = main.repartitionByRange(num_partitions, "zs")
-        main = main.sortWithinPartitions(*sort_cols)
+            main = main.repartitionByRange(num_partitions, *key)
+        main = main.sortWithinPartitions(*key)
 
         if persist:
             main = track(main)
@@ -216,40 +192,6 @@ class LQTTable:
             enc_cache=enc,
         )
         return tbl
-
-    # --------------------------------------------------------------- salting
-    @staticmethod
-    def detect_salt(
-        enc: DataFrame,
-        num_partitions: int,
-        fraction: float = 0.05,
-        margin: float = 1.5,
-    ) -> int:
-        """Sampled hot-key detection (north rule: explicit skew handling).
-
-        One small job over the (cached) encode: seeded sample → heaviest
-        zs value's mass fraction f → smallest salt s with f/s under a
-        partition's fair share (×margin); 0 when nothing is hot. Midline
-        collapse (SURVEY §1.3) makes hot zs keys a *structural* property
-        of real data, not an edge case. At cluster scale the same sketch
-        comes from the encoded staging table's column stats instead of a
-        sample scan."""
-        row = (
-            enc.select("zs")
-            .sample(fraction=fraction, seed=42)
-            .groupBy("zs")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("hot"), F.sum("c").alias("tot"))
-            .collect()[0]
-        )
-        if row is None or not row["tot"]:
-            return 0
-        f = row["hot"] / row["tot"]
-        if f * num_partitions <= 1.0:
-            return 0
-        import math
-
-        return min(int(math.ceil(f * num_partitions * margin)), num_partitions)
 
     # ------------------------------------------------------------ persistence
     def save(self, path: str, mode: str = "overwrite", format: str = "parquet") -> None:

@@ -108,7 +108,6 @@ def append_run(
     y_col: str = "y",
     tiebreaker: str | None = None,
     num_partitions: int | None = None,
-    salt: int | str = 0,
     gen: int | None = None,
     format: str = "parquet",
 ) -> int:
@@ -125,7 +124,7 @@ def append_run(
         gen = (existing[-1] + 1) if existing else 0
     run = LQTTable.build(
         delta, bounds, x_col, y_col, tiebreaker,
-        num_partitions=num_partitions, salt=salt,
+        num_partitions=num_partitions,
         persist=False, eager_count=False,
     )
     run.save(str(_runs_dir(path) / f"gen={gen}"), format=format)
@@ -160,7 +159,6 @@ def compact(
     y_col: str = "y",
     tiebreaker: str | None = None,
     num_partitions: int | None = None,
-    salt: int | str = 0,
     format: str = "parquet",
 ) -> int:
     """Fold base + all runs into a fresh single-sorted base (the
@@ -181,7 +179,7 @@ def compact(
     payload = [c for c in full.columns if c not in ("zkey", "zs", "zlvl")]
     rebuilt = LQTTable.build(
         full.select(*payload), bounds, x_col, y_col, tiebreaker,
-        num_partitions=num_partitions, salt=salt,
+        num_partitions=num_partitions,
         persist=False, eager_count=False,
     )
     staging = f"{path}/_compact_staging"

@@ -217,19 +217,11 @@ def test_tile_stats_consistent_with_geometry(tbl, points_pdf):
     assert total == len(points_pdf)
 
 
-def test_build_sortedness_and_count(tbl, points_pdf):
-    """test_mergesort analog (main.cpp:425-430): global pairwise sortedness
-    via lag window + partition-range disjointness + count preservation."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy("zs")
-    viol = (
-        tbl.main.select("zs")
-        .withColumn("prev", F.lag("zs").over(w))
-        .filter(F.col("prev") > F.col("zs"))
-        .count()
-    )
-    assert viol == 0
+def test_build_sortedness_and_count(tbl, points_pdf, order_violations):
+    """test_mergesort analog (main.cpp:425-430): (zs, key) never decreases
+    in physical order, within a partition or across a partition boundary,
+    and the build keeps every row."""
+    assert order_violations(tbl.main, "zs", "key") == 0
     assert tbl.main.count() + tbl.side.count() == len(points_pdf)
 
 

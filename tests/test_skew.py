@@ -9,8 +9,9 @@
   main relation must stay balanced.
 * **hot cell** — many rows at one repeated (faithful) coordinate, the
   real-world shape (pages geotagged to a city centroid). These share
-  one zs value inside MAIN, which RangePartitioner cannot split —
-  the case salting exists for (north rule: explicit skew handling).
+  one zs value inside MAIN. The build range-partitions on its sort key,
+  ``(zs, tiebreaker)``, so the run splits across partitions with no
+  option, and physical ``(zs, key)`` order still holds across them.
 """
 
 import numpy as np
@@ -21,6 +22,8 @@ from pyspark.sql import functions as F
 from linear_quadtree_spark.config import DEFAULT_BOUNDS
 from linear_quadtree_spark.operators.build import LQTTable, STORE_SPLIT_LEVEL, encode_points
 from linear_quadtree_spark.operators.spatial import bbox_query, knn_join
+
+pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
 
 N = 8000
 N_PARTS = 8
@@ -89,29 +92,24 @@ def test_hot_cell_lands_in_main_with_one_zs(spark, hot_df):
     assert rows[0].zlvl >= STORE_SPLIT_LEVEL  # faithful -> main relation
 
 
-def test_salt_bounds_partition_skew(spark, hot_df):
-    unsalted = LQTTable.build(hot_df, DEFAULT_BOUNDS, tiebreaker="key",
-                              num_partitions=N_PARTS, persist=False)
-    salted = LQTTable.build(hot_df, DEFAULT_BOUNDS, tiebreaker="key",
-                            num_partitions=N_PARTS, salt=N_PARTS, persist=False)
-    rows_u = _partition_rows(unsalted)
-    rows_s = _partition_rows(salted)
-    # unsalted: RangePartitioner cannot split equal zs -> one partition
-    # carries at least the whole hot run (half the table)
-    assert max(rows_u) >= N // 2
-    # salted: hottest partition bounded near fair share
-    fair = N / N_PARTS
-    assert max(rows_s) <= 2.5 * fair
-    assert max(rows_s) < max(rows_u) / 2
-    unsalted.unpersist()
-    salted.unpersist()
+@pytest.fixture(scope="module")
+def hot_tbl(hot_df):
+    t = LQTTable.build(hot_df, DEFAULT_BOUNDS, tiebreaker="key",
+                       num_partitions=N_PARTS)
+    yield t
+    t.unpersist()
 
 
-def test_salted_queries_identical(spark, hot_df, hot_pdf):
-    salted = LQTTable.build(hot_df, DEFAULT_BOUNDS, tiebreaker="key",
-                            num_partitions=N_PARTS, salt=N_PARTS)
+def test_default_build_splits_hot_cell(hot_tbl, order_violations):
+    # the hot run is half the table; range bounds on (zs, key) fall
+    # inside it, so no partition is far above its fair share
+    assert max(_partition_rows(hot_tbl)) <= 2.5 * N / N_PARTS
+    assert order_violations(hot_tbl.main, "zs", "key") == 0
+
+
+def test_hot_cell_queries_exact(spark, hot_tbl, hot_pdf):
     rect = (float(HOT_X) - 1.0, float(HOT_X) + 1.0, float(HOT_Y) - 1.0, float(HOT_Y) + 1.0)
-    got = sorted(r.key for r in bbox_query(salted, *rect).select("key").collect())
+    got = sorted(r.key for r in bbox_query(hot_tbl, *rect).select("key").collect())
     m = hot_pdf
     exp = sorted(
         m[(m.x >= rect[0]) & (m.x <= rect[1]) & (m.y >= rect[2]) & (m.y <= rect[3])].key.tolist()
@@ -121,32 +119,8 @@ def test_salted_queries_identical(spark, hot_df, hot_pdf):
     # kNN centred on the hot cell: k nearest are hot rows, tie-broken by key
     q = spark.createDataFrame([(0, float(HOT_X), float(HOT_Y))], ["qid", "qx", "qy"])
     k = 9
-    out = knn_join(salted, q, k).select("key", "rn", "dist2").collect()
+    out = knn_join(hot_tbl, q, k).select("key", "rn", "dist2").collect()
     assert len(out) == k
     assert all(r.dist2 == 0.0 for r in out)
     hot_keys = sorted(m[(m.x == HOT_X) & (m.y == HOT_Y)].key.tolist())
     assert sorted(r.key for r in out) == hot_keys[:k]
-    salted.unpersist()
-
-
-def test_auto_salt_detects_hot_key(spark, hot_df):
-    enc = encode_points(hot_df, DEFAULT_BOUNDS)
-    s = LQTTable.detect_salt(enc, N_PARTS, fraction=0.5)
-    assert s >= N_PARTS // 2  # ~50% mass on one key -> salt near partition count
-    tbl = LQTTable.build(hot_df, DEFAULT_BOUNDS, tiebreaker="key",
-                         num_partitions=N_PARTS, salt="auto", persist=False)
-    assert max(_partition_rows(tbl)) <= 2.5 * N / N_PARTS
-    tbl.unpersist()
-
-
-def test_auto_salt_declines_on_uniform_data(spark):
-    rng = np.random.default_rng(3)
-    pdf = pd.DataFrame(
-        {
-            "x": (1000 + 100 * rng.random(4000)).astype(np.float32),
-            "y": (1000 + 100 * rng.random(4000)).astype(np.float32),
-        }
-    )
-    pdf["key"] = np.arange(len(pdf), dtype=np.int64)
-    enc = encode_points(spark.createDataFrame(pdf), DEFAULT_BOUNDS)
-    assert LQTTable.detect_salt(enc, N_PARTS, fraction=0.5) == 0
