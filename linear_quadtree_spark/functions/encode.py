@@ -54,7 +54,6 @@ __all__ = [
     "zorder_encode_np",
     "encode_struct_udf",
     "zs_from_zkey",
-    "zkey_from_zs",
     "tile_id_col",
     "ENCODE_STRUCT_TYPE",
 ]
@@ -135,11 +134,6 @@ def zorder_encode_np(
 def zs_from_zkey(zkey_u64: np.ndarray) -> np.ndarray:
     """uint64 zkey → signed-sortable int64 (flip sign bit; SURVEY §1.2)."""
     return (zkey_u64 ^ np.uint64(SIGN_BIT)).view(np.int64)
-
-
-def zkey_from_zs(zs: int) -> int:
-    """Inverse of zs_from_zkey for driver-side ints → Python uint64 value."""
-    return (zs + SIGN_BIT) & ((1 << 64) - 1) ^ 0  # two's complement unflip
 
 
 ENCODE_STRUCT_TYPE = StructType(

@@ -181,6 +181,45 @@ def cell_wkt_sql(
     return f"concat('POLYGON((', {inner}, '))')"
 
 
+def _queen_scatter(
+    rel: DataFrame, zoom: int, with_self: bool, centre: bool = False
+) -> DataFrame:
+    """Scatter each tile of ``rel`` (keys…, tx, ty, cols…) to the cells
+    (ctx, cty) of its queen neighbourhood on the 2^zoom lattice: the 8
+    adjacent cells, plus the tile's own cell when ``with_self``. Cells
+    off the lattice ``[0, 2^zoom − 1]`` are dropped; every other column
+    rides along, and ``centre`` adds a boolean column marking the
+    own-cell row. The fan-out touches the tile relation only, and the
+    gather is an equi-keyed groupBy or join on (ctx, cty) — never an
+    inequality join."""
+    m = (1 << zoom) - 1
+    offs = ", ".join(
+        f"named_struct('dx', {dx}, 'dy', {dy})"
+        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+        if with_self or (dx, dy) != (0, 0)
+    )
+    cell = [
+        (F.col("tx") + F.col("o.dx")).alias("ctx"),
+        (F.col("ty") + F.col("o.dy")).alias("cty"),
+    ]
+    if centre:
+        cell.append(((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("centre"))
+    return (
+        rel.select("*", F.expr(f"explode(array({offs}))").alias("o"))
+        .select(*[c for c in rel.columns if c not in ("tx", "ty")], *cell)
+        .filter(F.col("ctx").between(0, m) & F.col("cty").between(0, m))
+    )
+
+
+def _queen_window(zoom: int) -> Column:
+    """W_i: the cell count of tile (tx, ty)'s 3×3 window clipped to the
+    2^zoom lattice (9 inside, 6 on an edge, 4 in a corner), as BIGINT."""
+    m = (1 << zoom) - 1
+    wx = F.least(F.col("tx") + 1, F.lit(m)) - F.greatest(F.col("tx") - 1, F.lit(0)) + 1
+    wy = F.least(F.col("ty") + 1, F.lit(m)) - F.greatest(F.col("ty") - 1, F.lit(0)) + 1
+    return (wx * wy).cast("bigint")
+
+
 def cell_neighbors(cell_id: int, level: int) -> list[int]:
     """8-neighborhood at the same level (driver-side planning helper for
     ring expansion). De-interleaves, steps, re-interleaves."""

@@ -84,7 +84,6 @@ __all__ = [
     "s2real_level_py",
     "s2real_range_py",
     "s2real_to_face_ij_py",
-    "s2real_center_py",
     "from_face_ij_np",
     "s2real_cap_cover",
     "s2real_region_cover",
@@ -319,25 +318,6 @@ def _uv_from_st(s: float) -> float:
     if s >= 0.5:
         return (1.0 / 3.0) * (4.0 * s * s - 1.0)
     return (1.0 / 3.0) * (1.0 - 4.0 * (1.0 - s) * (1.0 - s))
-
-
-def s2real_center_py(cell_id: int) -> tuple[float, float, float]:
-    """Unit XYZ of the leaf cell center (test helper for the cross-face
-    continuity invariant)."""
-    face, i, j = s2real_to_face_ij_py(cell_id)
-    kmax = 1 << S2_MAX_LEVEL
-    u = _uv_from_st((i + 0.5) / kmax)
-    v = _uv_from_st((j + 0.5) / kmax)
-    xyz = {
-        0: (1.0, u, v),
-        1: (-u, 1.0, v),
-        2: (-u, -v, 1.0),
-        3: (-1.0, -v, -u),
-        4: (v, -1.0, -u),
-        5: (v, u, -1.0),
-    }[face]
-    norm = math.sqrt(sum(c * c for c in xyz))
-    return tuple(c / norm for c in xyz)
 
 
 # ----------------------------------------------------- engine expressions

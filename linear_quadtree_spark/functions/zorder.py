@@ -29,7 +29,6 @@ from linear_quadtree_spark.functions.textexpr import DUCK, SPARK, Eng
 
 __all__ = [
     "zorder_interleave_expr",
-    "zorder_expr",
     "zorder_col",
     "zorder_sql_duck",
     "cluster_by_zorder",
@@ -55,17 +54,6 @@ def zorder_interleave_expr(e: Eng, idx_cols: list[str], bits: int) -> str:
         for j, c in enumerate(idx_cols)
     )
     return f"CAST({terms} AS BIGINT)"
-
-
-def zorder_expr(
-    e: Eng, cols: list[tuple[str, float, float]], bits: int = 16
-) -> str:
-    """Self-contained z-value expression from raw columns.
-    ``cols``: [(col_sql, lo, hi), ...]. Each index sub-expression is
-    inlined per bit — prefer staging indices in a projection/CTE (as
-    `zorder_col` / `zorder_sql_duck` do) for plan size."""
-    idxs = [f"({axis_index_expr(e, c, lo, hi, bits)})" for c, lo, hi in cols]
-    return zorder_interleave_expr(e, idxs, bits)
 
 
 def zorder_col(

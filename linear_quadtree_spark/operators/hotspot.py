@@ -26,23 +26,33 @@ HUGEINT (DuckDB) — exact to 10^38, i.e. |d_i| = |n·x_i − S| up to ~10^19
 per tile, far beyond any real corpus at query zooms. Gi* moments are
 BIGINT: per-tile counts ≤ ~3·10^9 at 4^zoom tiles keeps n·S2 in int64.
 
-Plan shapes (SCALE.md): both statistics aggregate the TILE relation
+Plan shapes (SCALE.md): every statistic aggregates the TILE relation
 (≤ 4^zoom rows), never the data — one map-side-combined shuffle of the
-rows to per-tile counts, then scatter-gather over 8/9 offsets exploded
-from the tile relation with an equi-join gather (the focal_smooth
-shape; no inequality join anywhere on the Spark side). The one-row
-totals relation broadcasts.
+rows to per-tile counts, then the queen scatter shared with
+focal_smooth (``geocell._queen_scatter``: 8 or 9 offsets exploded from
+the tile relation, gathered by an equi-keyed groupBy or join; no
+inequality join anywhere on the Spark side). Gi* IS focal_smooth plus
+the lattice moments. The one-row totals relation broadcasts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linear_quadtree_spark.cache import track
-from linear_quadtree_spark.functions.geocell import cell_axis_expr
+from linear_quadtree_spark.functions.geocell import (
+    _queen_scatter,
+    _queen_window,
+    cell_axis_expr,
+)
 from linear_quadtree_spark.functions.textexpr import DUCK
 from linear_quadtree_spark.operators.build import LQTTable
+from linear_quadtree_spark.operators.spatial import (
+    distance_join,
+    distance_join_ab,
+    focal_smooth,
+)
 
 __all__ = [
     "morans_i",
@@ -78,6 +88,39 @@ def _tile_counts(tbl: LQTTable, zoom: int) -> DataFrame:
     return tbl.tile_counts(zoom).withColumnRenamed("n_points", "x")
 
 
+def _deviations(tbl: LQTTable, zoom: int) -> DataFrame:
+    """The tile relation plus the totals n (occupied tiles) and s (Σx)
+    and the scaled deviation ``dv = n·x − s`` — an integer, the
+    substitution that keeps Moran's I, LISA and Geary's C exact.
+    Cached: each statistic scans it more than once."""
+    g = _tile_counts(tbl, zoom)
+    tot = g.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
+    return track(
+        g.crossJoin(F.broadcast(tot))
+        .withColumn("dv", F.col("n") * F.col("x") - F.col("s"))
+    )
+
+
+def _queen_pairs(rel: DataFrame, zoom: int, col: str | None = None) -> DataFrame:
+    """Ordered queen-adjacent pairs of ``rel``'s tiles: the 8-cell
+    scatter equi-joined back onto ``rel`` on the target cell, one row
+    per pair, carrying ``col`` of the two tiles as ``a`` and ``b``."""
+    vals = [col] if col else []
+    src = rel.select("tx", "ty", *[F.col(c).alias("a") for c in vals])
+    dst = rel.select(
+        F.col("tx").alias("ctx"), F.col("ty").alias("cty"),
+        *[F.col(c).alias("b") for c in vals],
+    )
+    return _queen_scatter(src, zoom, with_self=False).join(dst, ["ctx", "cty"])
+
+
+def _dec_prod(a, b) -> Column:
+    """a · b for two BIGINT columns (names or Columns) as decimal(38,0):
+    exact, so a sum over it stays integral."""
+    a, b = (F.col(c) if isinstance(c, str) else c for c in (a, b))
+    return a.cast("decimal(19,0)") * b.cast("decimal(19,0)")
+
+
 # ------------------------------------------------------------ Moran's I
 def morans_i(tbl: LQTTable, zoom: int) -> DataFrame:
     """Global Moran's I of per-tile density under queen contiguity.
@@ -97,47 +140,13 @@ def morans_i(tbl: LQTTable, zoom: int) -> DataFrame:
 
     Output (one row): (n_tiles, w_pairs, sum_points, morans_i,
     expected_i)."""
-    g = _tile_counts(tbl, zoom)
-    tot = g.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
-    )
-    d = track(
-        g.crossJoin(F.broadcast(tot)).select(
-            "tx", "ty", (F.col("n") * F.col("x") - F.col("s")).alias("dv"),
-            "n", "s",
-        )
-    )
-    offs = F.expr(
-        "explode(array(" + ", ".join(
-            f"named_struct('dx', {dx}, 'dy', {dy})"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)
-        ) + "))"
-    )
-    scatter = d.select(
-        "tx", "ty", F.col("dv").alias("da"), offs.alias("o")
-    ).select(
-        (F.col("tx") + F.col("o.dx")).alias("ctx"),
-        (F.col("ty") + F.col("o.dy")).alias("cty"),
-        "da",
-    )
-    pairs = scatter.join(
-        d.select(
-            F.col("tx").alias("ctx"), F.col("ty").alias("cty"),
-            F.col("dv").alias("db"),
-        ),
-        ["ctx", "cty"],
-    )
-    agg = pairs.agg(
+    d = _deviations(tbl, zoom)
+    agg = _queen_pairs(d, zoom, "dv").agg(
         F.count(F.lit(1)).alias("w"),
-        F.sum(
-            F.col("da").cast("decimal(19,0)") * F.col("db").cast("decimal(19,0)")
-        ).alias("num"),
+        F.sum(_dec_prod("a", "b")).alias("num"),
     )
     den = d.agg(
-        F.sum(
-            F.col("dv").cast("decimal(19,0)") * F.col("dv").cast("decimal(19,0)")
-        ).alias("den"),
+        F.sum(_dec_prod("dv", "dv")).alias("den"),
         F.first("n").alias("n"),
         F.first("s").alias("s"),
     )
@@ -225,56 +234,33 @@ def gi_star_hotspots(tbl: LQTTable, zoom: int) -> DataFrame:
     window sum comes only from occupied neighbours; its z is the
     map-background value — documented, not emitted).
 
-    Integer-exact moments (S1, S2 over occupied tiles ≡ over the
-    lattice), closed-form W_i — the lattice is never materialized; the
-    window sum is the focal_smooth scatter-gather. One shared double
+    Gi* reuses :func:`~linear_quadtree_spark.operators.spatial.focal_smooth`
+    outright: its ``focal_sum`` is the window sum and its ``window_sz``
+    the closed-form W_i, both from the queen scatter shared by every
+    tile statistic (``geocell._queen_scatter`` / ``_queen_window``), so
+    the lattice is never materialized and no join gathers the window.
+    The only join is the broadcast of the one-row integer moments
+    (S1, S2 over occupied tiles ≡ over the lattice). One shared double
     expression → hash-checkable vs the DuckDB twin.
 
     Output: (tile_id, tx, ty, n_points, focal_sum, window_sz, gi_z)."""
-    m = (1 << zoom) - 1
-    n_lat = 1 << (2 * zoom)
-    g = track(_tile_counts(tbl, zoom))
-    mom = g.agg(
+    mom = _tile_counts(tbl, zoom).agg(
         F.sum("x").alias("s1"),
         F.sum(F.col("x") * F.col("x")).alias("s2"),
     )
-    offs = F.expr(
-        "explode(array(" + ", ".join(
-            f"named_struct('dx', {dx}, 'dy', {dy})"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        ) + "))"
+    window = focal_smooth(tbl, zoom).selectExpr(
+        "tile_id", "tx", "ty", "n_points", "focal_sum AS fs", "window_sz AS w",
     )
-    contrib = (
-        g.select("tx", "ty", "x", offs.alias("o"))
-        .select(
-            (F.col("tx") + F.col("o.dx")).alias("ctx"),
-            (F.col("ty") + F.col("o.dy")).alias("cty"),
-            "x",
-        )
-        .filter(
-            (F.col("ctx") >= 0) & (F.col("ctx") <= m)
-            & (F.col("cty") >= 0) & (F.col("cty") <= m)
-        )
-    )
-    focal = contrib.groupBy("ctx", "cty").agg(F.sum("x").alias("fs"))
-    wx = F.least(F.col("tx") + 1, F.lit(m)) - F.greatest(F.col("tx") - 1, F.lit(0)) + 1
-    wy = F.least(F.col("ty") + 1, F.lit(m)) - F.greatest(F.col("ty") - 1, F.lit(0)) + 1
-    out = (
-        g.join(
-            focal,
-            (g["tx"] == focal["ctx"]) & (g["ty"] == focal["cty"]),
-        )
-        .withColumn("w", (wx * wy).cast("bigint"))
-        .crossJoin(F.broadcast(mom))
-    )
-    return out.selectExpr(
+    return window.crossJoin(F.broadcast(mom)).selectExpr(
         "tile_id",
         "tx",
         "ty",
-        "x AS n_points",
+        # an occupied tile's own count is never NULL; the coalesce keeps
+        # the column non-nullable, as in the tile relation
+        "coalesce(n_points, 0L) AS n_points",
         "fs AS focal_sum",
         "w AS window_sz",
-        _gi_z_expr(n_lat) + " AS gi_z",
+        _gi_z_expr(1 << (2 * zoom)) + " AS gi_z",
     )
 
 
@@ -304,8 +290,6 @@ def ripley_k(tbl: LQTTable, radii: list[float]) -> DataFrame:
     twin. The m radii cost one join, not m.
 
     Output per radius: (r_index, r, n_pairs, n_points, k_est, l_est)."""
-    from linear_quadtree_spark.operators.spatial import distance_join
-
     if not radii or sorted(radii) != list(radii):
         raise ValueError("radii must be a non-empty ascending list")
     b = tbl.bounds
@@ -426,8 +410,6 @@ def cross_k(
 
     Output per radius: (r_index, r, n_pairs, n_a, n_b, k_est, l_est).
     """
-    from linear_quadtree_spark.operators.spatial import distance_join_ab
-
     if not radii or sorted(radii) != list(radii):
         raise ValueError("radii must be a non-empty ascending list")
     area = (bounds.xend - bounds.xstart) * (bounds.yend - bounds.ystart)
@@ -554,8 +536,6 @@ def nn_dist_hist(
     what keeps the join density-bounded at corpus scale — the full
     G-function's tail needs unbounded search and belongs to kNN(k=1).
     """
-    from linear_quadtree_spark.operators.spatial import distance_join
-
     if rmax <= 0 or nbins < 1:
         raise ValueError("rmax must be positive and nbins >= 1")
     binw = repr(float(rmax) * float(rmax) / float(nbins))
@@ -697,39 +677,13 @@ def local_moran(tbl: LQTTable, zoom: int) -> DataFrame:
     (one binned×8 fan-out + equi-join gather) — tile-relation-sized
     throughout. Output: (tile_id, tx, ty, n_points, local_i,
     quadrant)."""
-    g = _tile_counts(tbl, zoom)
-    tot = g.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
+    d = _deviations(tbl, zoom)
+    nsum = (
+        _queen_scatter(d.select("tx", "ty", "dv"), zoom, with_self=False)
+        .groupBy("ctx", "cty")
+        .agg(F.sum(F.col("dv").cast("decimal(38,0)")).alias("ns"))
     )
-    d = track(
-        g.crossJoin(F.broadcast(tot)).select(
-            "tile_id", "tx", "ty", "x",
-            (F.col("n") * F.col("x") - F.col("s")).alias("dv"),
-            "n",
-        )
-    )
-    offs = F.expr(
-        "explode(array(" + ", ".join(
-            f"named_struct('dx', {dx}, 'dy', {dy})"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)
-        ) + "))"
-    )
-    scatter = d.select(
-        "tx", "ty", F.col("dv").alias("da"), offs.alias("o")
-    ).select(
-        (F.col("tx") + F.col("o.dx")).alias("ctx"),
-        (F.col("ty") + F.col("o.dy")).alias("cty"),
-        "da",
-    )
-    nsum = scatter.groupBy("ctx", "cty").agg(
-        F.sum(F.col("da").cast("decimal(38,0)")).alias("ns")
-    )
-    den = d.agg(
-        F.sum(
-            F.col("dv").cast("decimal(19,0)") * F.col("dv").cast("decimal(19,0)")
-        ).alias("den")
-    )
+    den = d.agg(F.sum(_dec_prod("dv", "dv")).alias("den"))
     return (
         d.join(
             nsum,
@@ -806,36 +760,11 @@ def general_g(tbl: LQTTable, zoom: int) -> DataFrame:
     tot = g.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("x").cast("decimal(19,0)")).alias("s"),
-        F.sum(
-            F.col("x").cast("decimal(19,0)") * F.col("x").cast("decimal(19,0)")
-        ).alias("sq"),
+        F.sum(_dec_prod("x", "x")).alias("sq"),
     )
-    offs = F.expr(
-        "explode(array(" + ", ".join(
-            f"named_struct('dx', {dx}, 'dy', {dy})"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)
-        ) + "))"
-    )
-    scatter = g.select(
-        "tx", "ty", F.col("x").alias("xa"), offs.alias("o")
-    ).select(
-        (F.col("tx") + F.col("o.dx")).alias("ctx"),
-        (F.col("ty") + F.col("o.dy")).alias("cty"),
-        "xa",
-    )
-    pairs = scatter.join(
-        g.select(
-            F.col("tx").alias("ctx"), F.col("ty").alias("cty"),
-            F.col("x").alias("xb"),
-        ),
-        ["ctx", "cty"],
-    )
-    agg = pairs.agg(
+    agg = _queen_pairs(g, zoom, "x").agg(
         F.count(F.lit(1)).alias("w"),
-        F.sum(
-            F.col("xa").cast("decimal(19,0)") * F.col("xb").cast("decimal(19,0)")
-        ).alias("num"),
+        F.sum(_dec_prod("a", "b")).alias("num"),
     )
     return (
         tot.crossJoin(agg)
@@ -1035,7 +964,6 @@ def join_counts(tbl: LQTTable, zoom: int, thresh: int = 2) -> DataFrame:
     expression over them (hash-checkable). Output one row:
     (n_cells, n_hot, bb_pairs, bw_pairs, ww_pairs, e_bb, var_bb, z_bb,
     e_bw)."""
-    m = (1 << zoom) - 1
     c = _jc_lattice_consts(zoom)
     fx = _jc_final_exprs(zoom)
     hot = track(
@@ -1043,26 +971,10 @@ def join_counts(tbl: LQTTable, zoom: int, thresh: int = 2) -> DataFrame:
         .filter(F.col("x") >= thresh)
         .select("tx", "ty")
     )
-    offs = F.expr(
-        "explode(array(" + ", ".join(
-            f"named_struct('dx', {dx}, 'dy', {dy})"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)
-        ) + "))"
-    )
-    scatter = hot.select("tx", "ty", offs.alias("o")).select(
-        (F.col("tx") + F.col("o.dx")).alias("ctx"),
-        (F.col("ty") + F.col("o.dy")).alias("cty"),
-    )
-    jj = scatter.join(
-        hot.select(F.col("tx").alias("ctx"), F.col("ty").alias("cty")),
-        ["ctx", "cty"],
-    ).agg(F.count(F.lit(1)).alias("j"))
-    wx = F.least(F.col("tx") + 1, F.lit(m)) - F.greatest(F.col("tx") - 1, F.lit(0)) + 1
-    wy = F.least(F.col("ty") + 1, F.lit(m)) - F.greatest(F.col("ty") - 1, F.lit(0)) + 1
+    jj = _queen_pairs(hot, zoom).agg(F.count(F.lit(1)).alias("j"))
     hs = hot.agg(
         F.count(F.lit(1)).alias("nb"),
-        F.coalesce(F.sum((wx * wy - 1).cast("bigint")), F.lit(0)).alias("degsum"),
+        F.coalesce(F.sum(_queen_window(zoom) - 1), F.lit(0)).alias("degsum"),
     )
     return (
         hs.crossJoin(F.broadcast(jj))
@@ -1156,49 +1068,14 @@ def geary_c(tbl: LQTTable, zoom: int) -> DataFrame:
     C = (n−1)·n²·SSW / (2W·Σd²) with every sum integral and ONE shared
     double expression at the end. Tile-relation-sized (the data never
     joins). Output one row: (n_tiles, w_pairs, geary_c, expected_c)."""
-    g = _tile_counts(tbl, zoom)
-    tot = g.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
-    )
-    d = track(
-        g.crossJoin(F.broadcast(tot)).select(
-            "tx", "ty", "x",
-            (F.col("n") * F.col("x") - F.col("s")).alias("dv"),
-            "n",
-        )
-    )
-    offs = F.expr(
-        "explode(array(" + ", ".join(
-            f"named_struct('dx', {dx}, 'dy', {dy})"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)
-        ) + "))"
-    )
-    scatter = d.select(
-        "tx", "ty", F.col("x").alias("xa"), offs.alias("o")
-    ).select(
-        (F.col("tx") + F.col("o.dx")).alias("ctx"),
-        (F.col("ty") + F.col("o.dy")).alias("cty"),
-        "xa",
-    )
-    pairs = scatter.join(
-        d.select(
-            F.col("tx").alias("ctx"), F.col("ty").alias("cty"),
-            F.col("x").alias("xb"),
-        ),
-        ["ctx", "cty"],
-    )
-    agg = pairs.agg(
+    d = _deviations(tbl, zoom)
+    diff = F.col("a") - F.col("b")
+    agg = _queen_pairs(d, zoom, "x").agg(
         F.count(F.lit(1)).alias("w"),
-        F.sum(
-            (F.col("xa") - F.col("xb")).cast("decimal(19,0)")
-            * (F.col("xa") - F.col("xb")).cast("decimal(19,0)")
-        ).alias("ssw"),
+        F.sum(_dec_prod(diff, diff)).alias("ssw"),
     )
     den = d.agg(
-        F.sum(
-            F.col("dv").cast("decimal(19,0)") * F.col("dv").cast("decimal(19,0)")
-        ).alias("sumd2"),
+        F.sum(_dec_prod("dv", "dv")).alias("sumd2"),
         F.first("n").alias("n"),
     )
     return den.crossJoin(agg).selectExpr(

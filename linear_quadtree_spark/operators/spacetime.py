@@ -23,7 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linear_quadtree_spark.config import DEFAULT_BOUNDS, Bounds
-from linear_quadtree_spark.functions.geocell import geocell_col, geocell_sql_duck
+from linear_quadtree_spark.functions.geocell import (
+    _queen_scatter,
+    _queen_window,
+    geocell_col,
+    geocell_sql_duck,
+)
 from linear_quadtree_spark.functions.geotag import (
     geotag_x,
     geotag_x_sql,
@@ -800,7 +805,8 @@ def emerging_hotspots(
     moments).
 
     Plan/scale shape: one hash aggregate to (tile, day) counts; the
-    scatter-gather fan-out is binned×9; the cube is occupied_tiles ×
+    scatter-gather fan-out is binned×9 (the shared queen scatter,
+    ``geocell._queen_scatter``, keyed by day); the cube is occupied_tiles ×
     active_days (never event-sized); per-bin moments broadcast
     (one row per day); MK pairs are C(days, 2) per tile. No lattice
     materialization, no inequality join on the Spark side.
@@ -811,7 +817,6 @@ def emerging_hotspots(
     from linear_quadtree_spark.functions.textexpr import SPARK
     from linear_quadtree_spark.operators.hotspot import _gi_z_expr
 
-    m = (1 << zoom) - 1
     n_lat = 1 << (2 * zoom)
     day = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
     keyed = _with_keys(events, zoom, bounds, geotag_col, ts_col)
@@ -828,28 +833,11 @@ def emerging_hotspots(
         F.sum("c").alias("s1"),
         F.sum(F.col("c") * F.col("c")).alias("s2"),
     )
-    offs = F.expr(
-        "explode(array(" + ", ".join(
-            f"named_struct('dx', {dx}, 'dy', {dy})"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        ) + "))"
+    focal = (
+        _queen_scatter(binned.select("d", "tx", "ty", "c"), zoom, with_self=True)
+        .groupBy("d", "ctx", "cty")
+        .agg(F.sum("c").alias("fs"))
     )
-    contrib = (
-        binned.select("d", "tx", "ty", "c", offs.alias("o"))
-        .select(
-            "d",
-            (F.col("tx") + F.col("o.dx")).alias("ctx"),
-            (F.col("ty") + F.col("o.dy")).alias("cty"),
-            "c",
-        )
-        .filter(
-            (F.col("ctx") >= 0) & (F.col("ctx") <= m)
-            & (F.col("cty") >= 0) & (F.col("cty") <= m)
-        )
-    )
-    focal = contrib.groupBy("d", "ctx", "cty").agg(F.sum("c").alias("fs"))
-    wx = F.least(F.col("tx") + 1, F.lit(m)) - F.greatest(F.col("tx") - 1, F.lit(0)) + 1
-    wy = F.least(F.col("ty") + 1, F.lit(m)) - F.greatest(F.col("ty") - 1, F.lit(0)) + 1
     z = track(
         cube.join(
             focal,
@@ -862,7 +850,7 @@ def emerging_hotspots(
             F.coalesce(F.col("fs"), F.lit(0)).cast("bigint").alias("fs"),
         )
         .join(F.broadcast(mom), "d")
-        .withColumn("w", (wx * wy).cast("bigint"))
+        .withColumn("w", _queen_window(zoom))
         .selectExpr(
             "tile", "tx", "ty", "d",
             _gi_z_expr(n_lat) + " AS gi_z",

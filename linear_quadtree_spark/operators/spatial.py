@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 from linear_quadtree_spark.functions.geocell import (
     _interleave_expr,
+    _queen_scatter,
+    _queen_window,
     axis_index_expr,
     cell_axis_expr,
     cell_rect_sql,
@@ -346,20 +348,16 @@ def knn_join(
         w = Window.partitionBy("qid").orderBy("dist2", tb)
         topk = track(cand.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k))
         found = topk.groupBy("qid").agg(F.count(F.lit(1)).alias("_cnt"))
-        resolved = found.filter(F.col("_cnt") >= k).select("qid")
-        results.append(topk.join(F.broadcast(resolved), "qid", "semi"))
-
-        pending = (
-            unresolved.join(F.broadcast(found), "qid", "left")
-            .withColumn("_cnt", F.coalesce(F.col("_cnt"), F.lit(0)))
-            .filter(F.col("_cnt") < k)
+        seen = unresolved.join(F.broadcast(found), "qid", "left").withColumn(
+            "_cnt", F.coalesce(F.col("_cnt"), F.lit(0))
         )
-        # fewer than k rows exist in the whole table for these queries:
-        # their r already covers the entire domain FROM THEIR POSITION
-        # (per-query bound), so the answer cannot improve — emit the
-        # partial result and retire them
-        exhausted = pending.filter(F.col("r") > F.col("maxr")).select("qid")
-        results.append(topk.join(F.broadcast(exhausted), "qid", "semi"))
+        # a query is done when it holds k candidates within its r, or when
+        # its r already covers the entire domain FROM ITS POSITION (the
+        # per-query bound): fewer than k rows exist for it, the answer
+        # cannot improve, so its partial result is emitted and it retires
+        done = (F.col("_cnt") >= k) | (F.col("r") > F.col("maxr"))
+        finished = seen.filter(done).select("qid")
+        results.append(topk.join(F.broadcast(finished), "qid", "semi"))
         grow = F.when(F.col("_cnt") <= 0, F.lit(8.0)).otherwise(
             F.least(
                 F.lit(8.0),
@@ -370,7 +368,7 @@ def knn_join(
             )
         )
         nxt = track(
-            pending.filter(F.col("r") <= F.col("maxr"))
+            seen.filter(~done)
             .withColumn("r", F.col("r") * grow)
             .select("qid", "qx", "qy", "r", "maxr")
         )
@@ -1023,62 +1021,38 @@ def focal_smooth(tbl: LQTTable, zoom: int) -> DataFrame:
 
     Scale shape: the convolution runs SCATTER-GATHER with NO JOIN — the
     per-tile aggregate (map-side combine, one shuffle of the raw rows)
-    is exploded 9x, each occupied tile scattering its count to the
-    cells of its own 3x3 window, then ONE groupBy on the target cell
-    gathers the sums AND recovers the center tile's own attributes in
-    the same aggregate (``max(case when dx=0 and dy=0 ...)``) — the
-    (0,0) offset row doubles as the "this cell is occupied" witness, so
+    is exploded 9x by the shared queen scatter
+    (``geocell._queen_scatter``), each occupied tile scattering its
+    count to the cells of its own 3x3 window, then ONE groupBy on the
+    target cell gathers the sums AND recovers the center tile's own
+    attributes in the same aggregate (max over the centre-marked row) —
+    the (0,0) offset row doubles as the "this cell is occupied" witness, so
     the gather-side equi-join (and the persist + second scan of the
     tile relation it required) disappears. Two shuffles total, no
     inequality join, no window over a cross product; the 9x fanout
     applies to the TILE relation (<= 4^zoom rows), never the data.
     Boundary cells use their true (smaller) window size, computed in
-    closed form.
+    closed form (``geocell._queen_window``). Gi* is this relation plus
+    the lattice moments (``hotspot.gi_star_hotspots``).
 
     Output per OCCUPIED tile: (tile_id, tx, ty, n_points, focal_sum,
     n_occupied_nbrs, window_sz, focal_mean)."""
-    m = (1 << zoom) - 1
-    per_tile = tbl.tile_counts(zoom)
-    offs = F.expr(
-        "explode(array(" + ", ".join(
-            f"named_struct('dx', {dx}, 'dy', {dy})"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        ) + "))"
-    )
-    contrib = (
-        per_tile.select("tile_id", "tx", "ty", "n_points", offs.alias("o"))
-        .select(
-            (F.col("tx") + F.col("o.dx")).alias("ctx"),
-            (F.col("ty") + F.col("o.dy")).alias("cty"),
-            "n_points",
-            F.expr(
-                "CASE WHEN o.dx = 0 AND o.dy = 0 THEN tile_id END"
-            ).alias("center_tile"),
-            F.expr(
-                "CASE WHEN o.dx = 0 AND o.dy = 0 THEN n_points END"
-            ).alias("center_n"),
-        )
-        .filter(
-            (F.col("ctx") >= 0) & (F.col("ctx") <= m)
-            & (F.col("cty") >= 0) & (F.col("cty") <= m)
-        )
-    )
+    centre = F.col("centre")
     focal = (
-        contrib.groupBy("ctx", "cty")
+        _queen_scatter(tbl.tile_counts(zoom), zoom, with_self=True, centre=True)
+        .groupBy("ctx", "cty")
         .agg(
             F.sum("n_points").alias("focal_sum"),
             F.count(F.lit(1)).alias("n_occupied_nbrs"),
-            F.max("center_tile").alias("tile_id"),
-            F.max("center_n").alias("n_points"),
+            F.max(F.when(centre, F.col("tile_id"))).alias("tile_id"),
+            F.max(F.when(centre, F.col("n_points"))).alias("n_points"),
         )
         .filter(F.col("tile_id").isNotNull())
         .withColumnRenamed("ctx", "tx")
         .withColumnRenamed("cty", "ty")
     )
-    wx = F.least(F.col("tx") + 1, F.lit(m)) - F.greatest(F.col("tx") - 1, F.lit(0)) + 1
-    wy = F.least(F.col("ty") + 1, F.lit(m)) - F.greatest(F.col("ty") - 1, F.lit(0)) + 1
     return (
-        focal.withColumn("window_sz", (wx * wy).cast("bigint"))
+        focal.withColumn("window_sz", _queen_window(zoom))
         .withColumn(
             "focal_mean",
             F.col("focal_sum").cast("double") / F.col("window_sz"),

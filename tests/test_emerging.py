@@ -8,6 +8,7 @@ import datetime as dt
 import math
 from collections import Counter, defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
 from linear_quadtree_spark.config import DEFAULT_BOUNDS
@@ -15,6 +16,8 @@ from linear_quadtree_spark.functions.geocell import cell_axis_expr, geocell_col
 from linear_quadtree_spark.functions.geotag import geotag_x, geotag_y
 from linear_quadtree_spark.functions.textexpr import SPARK
 from linear_quadtree_spark.operators.spacetime import emerging_hotspots
+
+pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
 
 T0 = dt.datetime(2026, 1, 1, 0, 30, 0)
 Z3 = 3

@@ -1,10 +1,14 @@
 """focal_smooth vs a Python brute-force neighborhood computation over
 the (independently verified) per-tile counts."""
 
+import pytest
+
 from linear_quadtree_spark import DEFAULT_BOUNDS
 from linear_quadtree_spark.functions.geotag import geotag_x, geotag_y
 from linear_quadtree_spark.operators import LQTTable
 from linear_quadtree_spark.operators.spatial import focal_smooth, tile_stats
+
+pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
 
 ZOOM = 3
 

@@ -5,11 +5,15 @@ counts — independent of BOTH the Spark plan and the DuckDB oracle twin
 
 import math
 
+import pytest
+
 from linear_quadtree_spark import DEFAULT_BOUNDS
 from linear_quadtree_spark.functions.geotag import geotag_x, geotag_y
 from linear_quadtree_spark.operators import LQTTable
 from linear_quadtree_spark.operators.hotspot import gi_star_hotspots, morans_i
 from linear_quadtree_spark.operators.spatial import tile_stats
+
+pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
 
 ZOOM = 3
 
@@ -100,8 +104,6 @@ def test_ripley_k_matches_bruteforce(spark, sf_dir):
 
 def test_ripley_k_rejects_bad_radii(spark, sf_dir):
     from linear_quadtree_spark.operators.hotspot import ripley_k
-
-    import pytest
 
     tbl = _table(spark, sf_dir)
     try:
@@ -278,8 +280,6 @@ def test_nn_dist_hist_bruteforce(spark, sf_dir):
 def test_nn_dist_hist_fixture_and_validation(spark):
     """Two mutual neighbors at distance 1 (bin floor(1/binw)), one
     point isolated beyond rmax (bin -1); bad params raise."""
-    import pytest
-
     from linear_quadtree_spark.operators.hotspot import nn_dist_hist
 
     pts = spark.createDataFrame(
@@ -343,8 +343,6 @@ def test_cross_k_bruteforce(spark, sf_dir):
 
 
 def test_cross_k_rejects_bad_radii(spark):
-    import pytest
-
     from linear_quadtree_spark.operators.hotspot import cross_k
 
     a = spark.createDataFrame([(1, 1010.0, 1010.0)], "doc_id: long, px: double, py: double")

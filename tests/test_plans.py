@@ -561,6 +561,19 @@ def test_focal_smooth_is_join_free(spark, tbl):
     assert plan.count("Exchange") <= 3
 
 
+def test_gi_star_is_focal_smooth_plus_broadcast_moments(spark, tbl):
+    """Gi* reuses focal_smooth's window sums and sizes: no equi-join
+    gathers the window, and the one join left is the broadcast of the
+    one-row (s1, s2) moments."""
+    from linear_quadtree_spark.operators.hotspot import gi_star_hotspots
+
+    plan = _plan(gi_star_hotspots(tbl, zoom=3))
+    for join in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"):
+        assert join not in plan, join
+    assert plan.count("BroadcastNestedLoopJoin") == 1
+    assert "CartesianProduct" not in plan
+
+
 def test_local_moran_broadcasts_denominator(spark, tbl):
     from linear_quadtree_spark.operators.hotspot import local_moran
 
