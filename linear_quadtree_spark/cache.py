@@ -12,6 +12,10 @@ This module gives those internal caches an owner:
 * ``track(df)`` — persist ``df`` and register the handle with the
   innermost active :func:`cache_scope`, or with the module-global
   registry when no scope is active.
+* ``checkpoint(df)`` — eager ``localCheckpoint`` of ``df``, registered
+  the same way. Its blocks belong to the checkpointed RDD, which
+  ``DataFrame.unpersist`` does not reach; the release paths unpersist
+  that RDD.
 * ``cache_scope()`` — context manager; on exit, unpersists everything
   tracked inside it. Wrap one query's *materialization* in a scope and
   its internal caches are released deterministically.
@@ -32,7 +36,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-__all__ = ["track", "untrack", "disown", "cache_scope", "release_caches"]
+__all__ = ["track", "checkpoint", "untrack", "disown", "cache_scope", "release_caches"]
 
 _SCOPES: list[list[DataFrame]] = []
 _GLOBAL: list[DataFrame] = []
@@ -64,6 +68,27 @@ def track(df: DataFrame, storage_level: StorageLevel | None = None) -> DataFrame
     df = df.persist(storage_level) if storage_level is not None else df.persist()
     (_SCOPES[-1] if _SCOPES else _GLOBAL).append(df)
     return df
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now with ``localCheckpoint`` and register the
+    snapshot for deterministic release. The snapshot's plan is a bare
+    scan of the checkpointed RDD, so it cuts the lineage: an iterative
+    operator that feeds each round's snapshot into the next keeps its
+    plan O(1) deep."""
+    df = df.localCheckpoint(eager=True)
+    (_SCOPES[-1] if _SCOPES else _GLOBAL).append(df)
+    return df
+
+
+def _release(df: DataFrame) -> None:
+    """Unpersist ``df``; for a :func:`checkpoint` snapshot also unpersist
+    the RDD it scans, which holds blocks Spark's cache manager does not
+    know about."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def untrack(*dfs: DataFrame) -> int:
@@ -125,7 +150,7 @@ def cache_scope():
             if _owned_elsewhere(df):
                 continue
             try:
-                df.unpersist()
+                _release(df)
             except Exception:
                 pass
 
@@ -140,7 +165,7 @@ def release_caches() -> int:
         if _owned_elsewhere(df):
             continue
         try:
-            df.unpersist()
+            _release(df)
             n += 1
         except Exception:
             pass

@@ -211,11 +211,13 @@ def _gi_z_expr(n_lattice: int) -> str:
     expression. Columns: fs (window sum incl. self), w (full clamped
     3×3 window size), s1 (Σx), s2 (Σx²); n = the FULL lattice size
     4^zoom (empty cells are x = 0 members). Zero-variance lattices are
-    detected integer-exactly (n·S2 = S1²) → NULL."""
+    detected integer-exactly (n·S2 = S1²) → NULL, and so is a window that
+    covers the whole lattice (w = n, every tile at zoom 1), whose
+    W·(n − W) denominator is 0."""
     n = f"{n_lattice}.0"
     xb = f"(CAST(s1 AS DOUBLE) / {n})"
     return (
-        f"CASE WHEN {n_lattice} * s2 = s1 * s1 THEN NULL ELSE "
+        f"CASE WHEN {n_lattice} * s2 = s1 * s1 OR w = {n_lattice} THEN NULL ELSE "
         f"(CAST(fs AS DOUBLE) - {xb} * CAST(w AS DOUBLE)) / "
         f"(SQRT(CAST(s2 AS DOUBLE) / {n} - {xb} * {xb}) * "
         f"SQRT((CAST(w AS DOUBLE) * ({n} - CAST(w AS DOUBLE))) / ({n} - 1.0)))"

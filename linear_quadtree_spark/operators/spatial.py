@@ -16,9 +16,12 @@ Every operator is filter-refine:
 from __future__ import annotations
 
 import math
+from functools import lru_cache
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, NumericType, StringType
 
 from linear_quadtree_spark.functions.geocell import (
     _interleave_expr,
@@ -31,7 +34,8 @@ from linear_quadtree_spark.functions.geocell import (
 )
 from linear_quadtree_spark.functions.encode import tile_id_col
 from linear_quadtree_spark.functions.textexpr import SPARK
-from linear_quadtree_spark.cache import track
+from linear_quadtree_spark.cache import checkpoint, track
+from linear_quadtree_spark.config import Bounds
 from linear_quadtree_spark.operators.build import LQTTable, STORE_SPLIT_LEVEL
 
 __all__ = [
@@ -87,6 +91,65 @@ _EDGE_CROSSING_SQL = (
 )
 
 
+@lru_cache(maxsize=None)
+def _grid_pad(bounds: Bounds, level: int) -> tuple[float, float]:
+    """Per-axis margin ``(pad_x, pad_y)`` by which ``_cell_candidates``
+    widens a probe box before it enumerates level-``level`` cells of the
+    IDEAL float64 grid ``g_i = S + i·w`` (``w = (E − S)/2^level``), so
+    that every main row inside the box is in an enumerated cell.
+
+    Main rows sit in the cells of the float32 DESCENT grid instead: the
+    encode's box walk (as ``plans.cover.cover_rect``) splits ``[c, e]``
+    into ``[c, m]`` and ``[m, fl32(m + h)]`` with ``h = fl32(fl32(e − c)/2)``
+    and ``m = fl32(c + h)``. The walk below computes its level-``level``
+    cells ``[lo_i, hi_i]`` and ``d``, the largest distance of a
+    ``lo_i`` or ``hi_i`` from ``g_i`` or ``g_{i+1}``. Let ``u`` be the
+    float32 ULP at 2·max|bound|, which bounds every rounding below.
+
+    Claim: the float32 coordinate ``v`` of a row with ``zlvl ≥ level``
+    (every main row: ``zlvl ≥ STORE_SPLIT_LEVEL ≥ level``) whose key
+    prefix holds cell ``i`` satisfies ``lo_i ≤ v < hi_i + u``. At every
+    level below ``level`` the snap ``q = floor(fl32(fl32(v − c)/h))``
+    equals the emitted bit, or the row would have diverged. ``q ≥ 0``
+    needs ``fl32(v − c) ≥ 0``, so ``v ≥ c``; ``c`` only moves to ``m`` on
+    a 1 bit, where ``v > m``; so ``v ≥ lo_i``. A last 0 bit gives
+    ``v ≤ m = hi_i``. A last 1 bit gives ``q < 2``, so ``v − c < 2h``
+    exactly, and ``c + 2h`` is within two half-ULPs of
+    ``hi_i = fl32(fl32(c + h) + h)``. This needs the snap to tell
+    ``q = −1, 0, 1, 2`` apart, which holds while every level-``level``
+    cell is at least ``4u`` wide; narrower domains raise.
+
+    The float64 coordinate ``x`` of that row rounds to ``v``, so
+    ``|x − v| ≤ u/2`` and ``x ∈ [g_i − d − u/2, g_{i+1} + d + 1.5u)``. A
+    row with ``a ≤ x ≤ b`` therefore has ``floor((a − p − S)/w) ≤ i ≤
+    floor((b + p − S)/w)`` for any ``p ≥ d + 1.5u``. The pad is
+    ``p = d + 2u``: the last ``u/2`` absorbs the float64 rounding of those
+    two floors, which is below ``2^-28·u`` in the domain. ``d`` is 0
+    where every ideal boundary is a float32 value, as for
+    ``DEFAULT_BOUNDS``; there the pad is ``2u`` (4.9e-4 units, against
+    the 3.125-unit cell that padding by one whole cell added at level
+    5)."""
+    f32 = np.float32
+
+    def _axis(start: float, end: float) -> float:
+        lo, hi = np.array([start], f32), np.array([end], f32)
+        for _ in range(level):
+            h = (hi - lo) / f32(2)
+            m = lo + h
+            lo, hi = np.stack([lo, m], 1).ravel(), np.stack([m, m + h], 1).ravel()
+        n = 1 << level
+        g = start + np.arange(n + 1) * ((end - start) / n)
+        d = max(np.abs(lo - g[:-1]).max(), np.abs(hi - g[1:]).max())
+        u = float(np.spacing(f32(2 * max(abs(start), abs(end)))))
+        if not (hi - lo).min() >= 4 * u:
+            raise ValueError(
+                f"bounds [{start}, {end}] are too narrow for their magnitude at level {level}"
+            )
+        return float(d) + 2 * u
+
+    return _axis(bounds.xstart, bounds.xend), _axis(bounds.ystart, bounds.yend)
+
+
 def _cell_candidates(
     tbl: LQTTable, probes: DataFrame, cols: list[str], box: tuple, level: int
 ) -> DataFrame:
@@ -94,60 +157,62 @@ def _cell_candidates(
     (Column expressions over ``probes``): the table's columns plus the
     probe's ``cols``, a superset of the rows inside the box.
 
-    Main rows: each box is fanned out to the level-``level`` cells of the
-    ideal float64 grid with ``explode(sequence)`` per axis, padded one
-    cell per side and clamped into ``[0, 2^level - 1]``, Morton-folded to
-    zkey prefixes and broadcast equi-joined on ``zkey >>> (64-2L)``. Side
-    rows (prefix-unfaithful, tiny): a broadcast join on the box itself.
-
-    Conservativeness: main-table rows are prefix-faithful to the
-    *float32 descent grid* (encode.py); this enumerates the *ideal*
-    float64 grid padded by one cell per side. The float32 grid's
-    boundaries deviate from ideal by < level·ULP(coordinate) ≈ 1.5e-3,
-    orders of magnitude under one cell width at any level ≤
-    STORE_SPLIT_LEVEL, so the pad strictly covers the deviation. Level 0
-    is refused: its shift 64 is masked to 0 by the JVM, so the join key
-    would be the whole zkey and match almost nothing."""
+    Each box is widened by ``_grid_pad`` (a few float32 ULPs plus the
+    float32 grid's deviation from the ideal one, computed once per bounds
+    and level on the driver), fanned out to the level-``level`` cells of
+    the ideal float64 grid with ``explode(sequence)`` per axis, clamped
+    into ``[0, 2^level - 1]`` and Morton-folded; these cells are the ONE
+    broadcast side of an equi-join against every table row. A main row's
+    cell is its zkey prefix ``zkey >>> (64-2L)`` (``_grid_pad`` proves
+    the superset). A side row (prefix-unfaithful, tiny) takes the ideal
+    grid cell of its float64 coordinates, through the same clamped
+    ``floor((v - start) / w)`` as the box ends; that expression is
+    monotone in ``v``, so a side row inside a box lands in one of its
+    cells. Level 0 is refused: its shift 64 is masked to 0 by the JVM,
+    so the join key would be the whole zkey and match almost nothing."""
     if not 1 <= level <= STORE_SPLIT_LEVEL:
         raise ValueError(f"cell level must be in [1, {STORE_SPLIT_LEVEL}], got {level}")
     b = tbl.bounds
     n_cells = 1 << level
     cw = (b.xend - b.xstart) / n_cells
     ch = (b.yend - b.ystart) / n_cells
+    pad_x, pad_y = _grid_pad(b, level)
     x0, x1, y0, y1 = box
 
-    def _clamp(c):
-        return F.greatest(F.lit(0).cast("long"), F.least(F.lit(n_cells - 1).cast("long"), c))
-
-    def _axis(lo, hi, start: float, w: float):
-        # clamp BOTH ends into [0, n-1]: a box outside the domain
-        # otherwise leaves lo unbounded above (or hi below), and Spark's
+    def _index(v, start: float, w: float):
+        # clamp into [0, n-1]: a box outside the domain otherwise leaves
+        # its low end unbounded above (or its high end below), and Spark's
         # sequence(start, stop) with start > stop counts DOWN — a far
         # out-of-domain probe would try to materialize a billion-element
         # index array (regression-tested)
+        return F.greatest(
+            F.lit(0).cast("long"),
+            F.least(F.lit(n_cells - 1).cast("long"), F.floor((v - F.lit(start)) / F.lit(w))),
+        )
+
+    def _axis(lo, hi, start: float, w: float, pad: float):
         return F.explode(F.sequence(
-            _clamp(F.floor((lo - F.lit(start)) / F.lit(w)) - 1),
-            _clamp(F.floor((hi - F.lit(start)) / F.lit(w)) + 1),
+            _index(lo - F.lit(pad), start, w), _index(hi + F.lit(pad), start, w)
         ))
 
+    cell = F.expr(_interleave_expr(SPARK, "(_ix)", "(_iy)", level))
     # cell prefixes and shiftrightunsigned(zkey) are both plain
     # non-negative longs — no sign-flip needed on the equi-join key
     cells = (
-        probes.withColumn("ix", _axis(x0, x1, b.xstart, cw))
-        .withColumn("iy", _axis(y0, y1, b.ystart, ch))
-        .withColumn("cell", F.expr(_interleave_expr(SPARK, "(ix)", "(iy)", level)))
-        .select(*cols, "cell")
+        probes.withColumn("_ix", _axis(x0, x1, b.xstart, cw, pad_x))
+        .withColumn("_iy", _axis(y0, y1, b.ystart, ch, pad_y))
+        .select(*cols, cell.alias("_cell"))
     )
-    cand_main = (
-        tbl.main.withColumn("_cell", tile_id_col(F.col("zkey"), level))
-        .join(F.broadcast(cells), F.col("_cell") == F.col("cell"), "inner")
-        .drop("_cell", "cell")
+    xc, yc = F.col(tbl.x_col).cast("double"), F.col(tbl.y_col).cast("double")
+    side = (
+        tbl.side.withColumn("_ix", _index(xc, b.xstart, cw))
+        .withColumn("_iy", _index(yc, b.ystart, ch))
+        .select(*tbl.side.columns, cell.alias("_zcell"))
     )
-    xc, yc = F.col(tbl.x_col), F.col(tbl.y_col)
-    cand_side = tbl.side.join(
-        F.broadcast(probes), (xc >= x0) & (xc <= x1) & (yc >= y0) & (yc <= y1), "inner"
-    ).select(*tbl.side.columns, *cols)
-    return cand_main.unionByName(cand_side)
+    rows = tbl.main.withColumn("_zcell", tile_id_col(F.col("zkey"), level)).unionByName(side)
+    return rows.join(F.broadcast(cells), F.col("_zcell") == F.col("_cell"), "inner").drop(
+        "_zcell", "_cell"
+    )
 
 
 def point_in_polygon_join(
@@ -231,6 +296,10 @@ def point_in_polygon_join(
     )
 
 
+#: types whose non-null kNN sentinel filler is ``CAST(0 AS type)``
+_FILLABLE = (NumericType, StringType, BooleanType)
+
+
 def knn_join(
     tbl: LQTTable,
     queries: DataFrame,
@@ -241,40 +310,52 @@ def knn_join(
 ) -> DataFrame:
     """Exact k-nearest-neighbors for each query point (SURVEY §2.9 ring
     expansion), fully distributed: the query table stays a DataFrame
-    end-to-end (cell enumeration, candidate join, resolution, and the
-    expand-anti-join are all DataFrame ops); the driver holds only the
-    round counter and one stats row (count, min r, max r) per round.
+    end to end, and the driver holds only the round counter and one
+    metrics row (count, min r, max r) per round.
 
-    PER-QUERY adaptive radius (round-3): ``r`` is a COLUMN of the
-    unresolved set. Per round: ``_cell_candidates`` fans each query's own
-    r-square out to level-L grid cells, broadcast equi-joined against
-    ``zkey >>> (64-2L)`` on the main relation (+ a box broadcast join
-    against the tiny side relation); keep candidates with dist² ≤ r²,
-    window top-k per query. A query resolves when it has ≥ k candidates
-    within its r: the square covers the full r-disk, so nothing outside
-    can beat the k-th hit — exactness is unconditional regardless of the
-    expansion schedule. Unresolved queries then expand INDIVIDUALLY from
-    their observed local density: a query that found m of k candidates
-    expands by ~1.5·√(k/m) (the radius a uniform local density needs,
-    with slack), clamped to [2, 8]; a query that found nothing expands
-    ×8 — so one far outlier stops forcing extra ×4 global rounds on
-    everyone and itself converges in log₈ instead of log₄ rounds. The
-    shared cell level per round spans the in-flight radius range
-    (matched to the smallest r, capped 3 levels below the largest so no
-    query fans out more than ~19² cells). A query whose r exceeds ITS
-    OWN distance to the farthest domain corner has seen every row —
-    it emits its (complete-as-possible) partial result and leaves the
-    set; out-of-domain queries start at their distance to the domain
-    (jumpstart) so they never burn rounds on radii that cannot reach a
-    point. Every r grows ≥×2 per round → O(log(span/r₀)) rounds,
-    always terminates.
+    PER-QUERY adaptive radius: ``r`` is a COLUMN of the in-flight query
+    set. Each round is ONE eager ``localCheckpoint``:
 
-    Returns (qid, qx, qy, payload columns..., dist2, rn). Distance:
-    squared Euclidean float64, ties broken by the tiebreaker. Round
-    caches are registered with cache.track; call
-    ``cache.release_caches()`` (or wrap in ``cache_scope``) after
+    1. ``_cell_candidates`` fans each query's own r-square out to
+       level-L grid cells, broadcast equi-joined against the table rows'
+       cells; candidates with dist² ≤ r² are kept;
+    2. one SENTINEL row per in-flight query (dummy payload, ``_q`` true)
+       joins them, and ``row_number()`` over
+       ``(qid ORDER BY _q, dist2, tiebreaker)`` ranks the sentinel after
+       every real candidate. ``rn <= k + 1`` sits directly on that
+       window, so Spark plans a map-side WindowGroupLimit;
+    3. the sentinel's ``rn − 1`` is the query's candidate count when it
+       is ≤ k (a max over ``qid`` spreads it to the query's rows); a
+       query without a surviving sentinel has more than k;
+    4. the checkpoint keeps the top-k real rows of the queries that are
+       done, and the sentinels of the others with ``r`` grown. An
+       ``Observation`` on it returns the kept sentinels' count, min r and
+       max r, which end the loop or size the next round's cell level.
+
+    A query is done when it holds k candidates within its r (the square
+    covers the full r-disk, so nothing outside can beat the k-th hit —
+    exactness holds regardless of the expansion schedule), or when its r
+    exceeds ITS OWN distance to the farthest domain corner (it has seen
+    every row and emits its partial result). The others expand
+    INDIVIDUALLY from their observed local density: m of k candidates
+    expands r by ~1.5·√(k/m) (the radius a uniform local density needs,
+    with slack), clamped to [2, 8]; none expands ×8, so one far outlier
+    converges in log₈ rounds without dragging everyone through extra
+    rounds. The shared cell level per round spans the in-flight radius
+    range (matched to the smallest r, capped 3 levels below the largest
+    so no query fans out more than ~19² cells). Out-of-domain queries
+    start at their distance to the domain (jumpstart). Every r grows ≥×2
+    per round → O(log(span/r₀)) rounds, always terminates. Each round
+    reads only the previous checkpoint, so the plan stays O(1) deep
+    however many rounds run.
+
+    Returns (qid, table columns..., qx, qy, dist2, rn). Distance:
+    squared Euclidean float64, ties broken by the tiebreaker. The query
+    relation and the round checkpoints are registered with cache.py;
+    call ``cache.release_caches()`` (or wrap in ``cache_scope``) after
     consuming the result. ``stats_out``, if given, receives
-    {"rounds": int} for diagnostics/tests.
+    ``{"rounds": int, "unresolved": [int, ...]}``: the number of rounds
+    and the queries still in flight after each round.
     """
     n_est = tbl.build_metrics.get("rows") or max(tbl.main.count(), 1)
     bw = tbl.bounds.xend - tbl.bounds.xstart
@@ -313,7 +394,10 @@ def knn_join(
         F.abs(F.col("qy") - F.lit(tbl.bounds.ystart)),
         F.abs(F.col("qy") - F.lit(tbl.bounds.yend)),
     )
-    unresolved = track(
+    # materialized: round 1 reads it twice (cells, sentinels); a
+    # checkpoint costs one job, where a persisted relation costs AQE one
+    # cache-stage job per read
+    in_flight = checkpoint(
         queries.select("qid", "qx", "qy")
         .withColumn(
             "r",
@@ -324,70 +408,71 @@ def knn_join(
         )
         .withColumn("maxr", F.sqrt(dxf * dxf + dyf * dyf) * 2 + F.lit(1.0))
     )
-    prev_unresolved = None
+    qcols = ["qid", "qx", "qy", "r", "maxr"]
+    out_cols = ["qid", *tbl.main.columns, "qx", "qy", "dist2", "rn"]
+    # a sentinel's payload is never emitted; a non-null filler of the
+    # column's type keeps the output's nullability as the table's
+    sentinel_payload = [
+        (F.lit(0) if not f.nullable and isinstance(f.dataType, _FILLABLE) else F.lit(None))
+        .cast(f.dataType)
+        .alias(f.name)
+        for f in tbl.main.schema.fields
+    ]
+    ranked_by = Window.partitionBy("qid").orderBy("_q", "dist2", tb)
+    per_query = Window.partitionBy("qid")
+    qx, qy, r, cnt, is_q = F.col("qx"), F.col("qy"), F.col("r"), F.col("_cnt"), F.col("_q")
+    box = (qx - r, qx + r, qy - r, qy + r)
+    dx = xc.cast("double") - qx
+    dy = yc.cast("double") - qy
+    done = cnt.isNull() | (cnt >= k) | (r > F.col("maxr"))
+    grow = F.when(cnt <= 0, F.lit(8.0)).otherwise(
+        F.least(F.lit(8.0), F.greatest(F.lit(2.0), F.lit(1.5) * F.sqrt(F.lit(float(k)) / cnt)))
+    )
     r_min = r_max = float(initial_radius)
     results: list[DataFrame] = []
-    rounds = 0
+    unresolved: list[int] = []
 
     while True:
-        rounds += 1
         # shared level spanning the in-flight radius range: matched to the
         # smallest radius (tight pruning), capped 3 levels below the level
         # of the largest (bounds the widest query's fan-out at ~19² cells)
         lvl = max(1, min(_lvl_for(r_min), _lvl_for(r_max) + 3))
-        qx, qy, r = F.col("qx"), F.col("qy"), F.col("r")
-        box = (qx - r, qx + r, qy - r, qy + r)
-        dx = xc.cast("double") - qx
-        dy = yc.cast("double") - qy
         cand = (
-            _cell_candidates(tbl, unresolved, ["qid", "qx", "qy", "r"], box, lvl)
+            _cell_candidates(tbl, in_flight, qcols, box, lvl)
             .withColumn("dist2", dx * dx + dy * dy)
-            .filter(F.col("dist2") <= F.col("r") * F.col("r"))
-            .drop("r")
+            .filter(F.col("dist2") <= r * r)
+            .withColumn("_q", F.lit(False))
         )
-        w = Window.partitionBy("qid").orderBy("dist2", tb)
-        topk = track(cand.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k))
-        found = topk.groupBy("qid").agg(F.count(F.lit(1)).alias("_cnt"))
-        seen = unresolved.join(F.broadcast(found), "qid", "left").withColumn(
-            "_cnt", F.coalesce(F.col("_cnt"), F.lit(0))
+        sentinels = in_flight.select(
+            *sentinel_payload,
+            *qcols,
+            F.lit(None).cast("double").alias("dist2"),
+            F.lit(True).alias("_q"),
         )
-        # a query is done when it holds k candidates within its r, or when
-        # its r already covers the entire domain FROM ITS POSITION (the
-        # per-query bound): fewer than k rows exist for it, the answer
-        # cannot improve, so its partial result is emitted and it retires
-        done = (F.col("_cnt") >= k) | (F.col("r") > F.col("maxr"))
-        finished = seen.filter(done).select("qid")
-        results.append(topk.join(F.broadcast(finished), "qid", "semi"))
-        grow = F.when(F.col("_cnt") <= 0, F.lit(8.0)).otherwise(
-            F.least(
-                F.lit(8.0),
-                F.greatest(
-                    F.lit(2.0),
-                    F.lit(1.5) * F.sqrt(F.lit(float(k)) / F.col("_cnt")),
-                ),
-            )
+        ranked = (
+            cand.unionByName(sentinels)
+            .withColumn("rn", F.row_number().over(ranked_by))
+            .filter(F.col("rn") <= k + 1)
+            .withColumn("_cnt", F.max(F.when(is_q, F.col("rn") - 1)).over(per_query))
         )
-        nxt = track(
-            seen.filter(~done)
-            .withColumn("r", F.col("r") * grow)
-            .select("qid", "qx", "qy", "r", "maxr")
-        )
-        # the ONE driver-side action per round: remaining count + the
-        # next round's radius envelope in a single stats row
-        stats = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("r").alias("rmin"),
-            F.max("r").alias("rmax"),
-        ).collect()[0]
-        if prev_unresolved is not None:
-            prev_unresolved.unpersist()
-        prev_unresolved, unresolved = unresolved, nxt
+        kept = ranked.filter(
+            F.when(is_q, ~done).otherwise(done & (F.col("rn") <= k))
+        ).withColumn("r", F.when(is_q, r * grow))
+        obs = Observation()
+        snap = checkpoint(kept.observe(
+            obs, F.count(r).alias("n"), F.min(r).alias("rmin"), F.max(r).alias("rmax")
+        ))
+        stats = obs.get
+        unresolved.append(stats["n"])
+        results.append(snap.filter(~is_q).select(*out_cols))
         if not stats["n"]:
             break
+        in_flight = snap.filter(is_q).select(*qcols)
         r_min, r_max = float(stats["rmin"]), float(stats["rmax"])
 
     if stats_out is not None:
-        stats_out["rounds"] = rounds
+        stats_out["rounds"] = len(unresolved)
+        stats_out["unresolved"] = unresolved
     out = results[0]
     for res in results[1:]:
         out = out.unionByName(res)

@@ -464,3 +464,23 @@ def test_hhi_ppm_survives_int64_overflow(spark):
     ]
     assert got == exp
     assert all(0 < v <= 1_000_000 for v in got)  # a ppm, not a wrap
+
+
+def test_zoom1_matches_twin(spark, sf_dir):
+    """Zoom 1: every per-day Gi* window is the whole lattice, so every z
+    is NULL (no division by zero) and Spark matches the DuckDB twin."""
+    import duckdb
+    import pandas as pd
+
+    from jobs.check_oracles import normalize
+    from linear_quadtree_spark.operators.spacetime import emerging_hotspots_sql_duck
+
+    path = f"{sf_dir}/events.parquet"
+    got = emerging_hotspots(spark.read.parquet(path), zoom=1).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    exp = con.execute(emerging_hotspots_sql_duck("events", zoom=1)).fetch_df()
+    assert len(got) > 0 and (got.hot_bins == 0).all()
+    pd.testing.assert_frame_equal(
+        normalize(got), normalize(exp), check_dtype=False, check_exact=True
+    )

@@ -534,3 +534,34 @@ def test_tile_gini_extremes(spark):
         assert abs(t1_row.gini - (n - 1) / n) < 1e-15
     finally:
         t1.unpersist()
+
+
+def test_gi_star_zoom1_is_null_and_matches_twin(spark, sf_dir):
+    """At zoom 1 every clamped window is the whole 4-cell lattice (W = n),
+    so the Gi* denominator W·(n − W) is 0: gi_z is NULL on Spark and in
+    the DuckDB twin alike, never a division by zero."""
+    import duckdb
+    import pandas as pd
+
+    from __spark_entry__ import _PTS_CTE
+    from jobs.check_oracles import normalize
+    from linear_quadtree_spark.functions.refsql import ref_prefix_cte_duck
+    from linear_quadtree_spark.operators.hotspot import gi_star_sql_duck
+
+    tbl = _table(spark, sf_dir)
+    try:
+        got = gi_star_hotspots(tbl, 1).toPandas()
+    finally:
+        tbl.unpersist()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    exp = con.execute(
+        f"WITH {_PTS_CTE},\n{ref_prefix_cte_duck('pts', 1, DEFAULT_BOUNDS)},"
+        f"{gi_star_sql_duck(1)}"
+    ).fetch_df()
+    assert len(got) == 4 and (got.window_sz == 4).all() and got.gi_z.isna().all()
+    pd.testing.assert_frame_equal(
+        normalize(got), normalize(exp), check_dtype=False, check_exact=True
+    )

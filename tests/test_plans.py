@@ -723,3 +723,29 @@ def test_s2_cap_query_broadcasts_ranges_and_sites(spark, sf_dir):
     plan = _plan(entry._q_s2real_cap(spark, sf_dir))
     assert "BroadcastExchange" in plan
     assert "LeftSemi" in plan
+
+
+def test_knn_single_round_job_budget(spark, tbl):
+    """A kNN round is one eager checkpoint. With the table's relations
+    already cached, its jobs are the query relation's checkpoint, the
+    cell broadcast, AQE's cache stages of the two table relations, and
+    the ranking window's shuffle and result stages. A round that fans out
+    into separate top-k, count, resolve and stats relations ran 11 here."""
+    from linear_quadtree_spark.cache import release_caches
+    from linear_quadtree_spark.operators.spatial import knn_join
+    from linear_quadtree_spark.sources.synth import knn_queries_df
+
+    sc = spark.sparkContext
+    tbl.main.count(), tbl.side.count()
+    q = knn_queries_df(spark, 6)
+    stats: dict = {}
+    sc.setJobGroup("knn_budget", "knn_budget")
+    try:
+        knn_join(tbl, q, 3, stats_out=stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("knn_budget")
+    release_caches()
+    assert stats["rounds"] == 1
+    assert len(jobs) <= 6, len(jobs)

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from linear_quadtree_spark.config import DEFAULT_BOUNDS
+from linear_quadtree_spark.config import DEFAULT_BOUNDS, Bounds
 from linear_quadtree_spark.operators.build import LQTTable
 from linear_quadtree_spark.operators.spatial import (
     bbox_query,
@@ -184,6 +184,57 @@ def test_knn_k_larger_than_table(spark):
     # both rows returned for each query, never more
     counts = {r.qid: r.cnt for r in out.groupBy("qid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert all(v == 2 for v in counts.values())
+
+
+def test_knn_many_rounds_exact_with_flat_plan(spark):
+    """Five expansion rounds (initial_radius=0.01) over 20k points and 64
+    queries. Each round reads only the previous round's checkpoint, so
+    the plan stays O(1) deep; when every round's plan nested the previous
+    round's plan, this case exhausted a 2 GB driver heap."""
+    import time
+
+    from linear_quadtree_spark.cache import release_caches
+    from perfbench.workloads import Points, knn_answer, points_df, queries_df
+
+    t = LQTTable.build(points_df(spark, 0, 20_000, 2), DEFAULT_BOUNDS, tiebreaker="pid")
+    qx, qy = np.random.default_rng(0).uniform(1000.0, 1100.0, (2, 64))
+    stats: dict = {}
+    try:
+        t0 = time.perf_counter()
+        out = knn_join(t, queries_df(spark, qx, qy), 10, initial_radius=0.01, stats_out=stats)
+        got = {(r.qid, r.pid) for r in out.select("qid", "pid").collect()}
+        secs = time.perf_counter() - t0
+        release_caches()
+    finally:
+        t.unpersist()
+    pts = Points(0, 20_000)
+    assert got == {(q, p) for q in range(64) for p in knn_answer(pts, qx[q], qy[q], 10)}
+    assert stats["rounds"] == 5 and len(stats["unresolved"]) == 5, stats
+    assert stats["unresolved"][-1] == 0 and stats["unresolved"][0] == 64, stats
+    assert secs < 180, secs
+
+
+def test_knn_release_returns_storage_to_baseline(spark, tbl):
+    """Round checkpoints hold blocks Spark's cache manager does not know
+    about; cache.py must unpersist their RDDs. Six consecutive
+    multi-round calls, each consumed and then released, leave executor
+    storage exactly as it was before them."""
+    from linear_quadtree_spark.cache import release_caches
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def storage():
+        return sorted((i.id(), i.memSize(), i.diskSize()) for i in sc.getRDDStorageInfo())
+
+    tbl.main.count(), tbl.side.count()
+    release_caches()
+    base = storage()
+    for k in (1, 2, 3, 5, 8, 13):
+        stats: dict = {}
+        out = knn_join(tbl, knn_queries_df(spark, 6), k, initial_radius=0.3, stats_out=stats)
+        assert out.count() == 6 * k and stats["rounds"] > 1
+        release_caches()
+        assert storage() == base, k
 
 
 def test_tile_stats_consistent_with_geometry(tbl, points_pdf):
@@ -443,6 +494,88 @@ def test_pip_join_level_zero_raises(tbl, spark):
     for bad in (0, STORE_SPLIT_LEVEL + 1):
         with pytest.raises(ValueError, match="cell level"):
             _cell_candidates(tbl, tbl.main, [], box, bad)
+
+
+def _descent_grid(start: float, end: float, level: int):
+    """Cell bounds (lo, hi) of the encode's float32 box walk at ``level``,
+    written out independently of ``spatial._grid_pad``."""
+    f32 = np.float32
+    lo, hi = np.array([start], f32), np.array([end], f32)
+    for _ in range(level):
+        h = (hi - lo) / f32(2)
+        m = lo + h
+        lo, hi = np.stack([lo, m], 1).ravel(), np.stack([m, m + h], 1).ravel()
+    return lo, hi
+
+
+@pytest.mark.parametrize(
+    "bounds",
+    [DEFAULT_BOUNDS, Bounds(-3.3, 7.7, 100.7, 103.9)],
+    ids=["default", "non_dyadic"],
+)
+def test_cell_candidates_pad_is_conservative(spark, bounds):
+    """Property test of the computed cell pad: at every level 1..12,
+    points on the float32 descent grid's cell boundaries, 0-2 ULPs off
+    and stored as float64 up to 0.45 ULP away from their float32 value,
+    are each found by a zero-width box at their own coordinates.
+    ``_cell_candidates`` must return a superset of the brute-force box
+    filter, for main rows (zlvl >= 12, which the pad guards) and side
+    rows alike. The non-dyadic bounds make the float32 grid deviate from
+    the ideal float64 one, so the pad's deviation term is exercised."""
+    from linear_quadtree_spark.functions.encode import zorder_encode_np
+    from linear_quadtree_spark.operators.build import STORE_SPLIT_LEVEL
+    from linear_quadtree_spark.operators.spatial import _cell_candidates
+
+    rng = np.random.default_rng(3)
+    f32 = np.float32
+    xs, ys = [], []
+    for level in range(1, STORE_SPLIT_LEVEL + 1):
+        axes = []
+        for start, end in ((bounds.xstart, bounds.xend), (bounds.ystart, bounds.yend)):
+            lo, hi = _descent_grid(start, end, level)
+            g = start + np.arange(lo.size + 1) * ((end - start) / lo.size)
+            edges = np.concatenate([lo, hi])
+            dev = np.abs(edges - np.concatenate([g[:-1], g[1:]]))
+            # the most deviating boundaries, where the pad is tightest
+            v = np.concatenate([edges[np.argsort(-dev)[:50]], rng.choice(edges, 50)])
+            for _ in range(2):  # up to 2 ULPs either way
+                step = rng.integers(-1, 2, v.size)
+                v = np.where(step > 0, np.nextafter(v, f32(np.inf)),
+                             np.where(step < 0, np.nextafter(v, f32(-np.inf)), v))
+            off = rng.choice([0.0, 0.45, -0.45], v.size)
+            axes.append(v.astype(np.float64) + off * np.spacing(v).astype(np.float64))
+        xs.append(axes[0])
+        ys.append(axes[1])
+    x, y = np.concatenate(xs), np.concatenate(ys)
+    assert (x.astype(f32).astype(np.float64) != x).any()
+    _, zlvl = zorder_encode_np(x.astype(f32), y.astype(f32), bounds)
+    main = zlvl >= STORE_SPLIT_LEVEL
+    assert main.sum() > 300 and (~main).sum() > 0
+    if bounds != DEFAULT_BOUNDS:
+        lo, _ = _descent_grid(bounds.xstart, bounds.xend, STORE_SPLIT_LEVEL)
+        ideal = bounds.xstart + np.arange(lo.size) * ((bounds.xend - bounds.xstart) / lo.size)
+        assert (lo != ideal).any()
+
+    pid = np.arange(x.size, dtype=np.int64)
+    pdf = pd.DataFrame({"pid": pid, "x": x, "y": y})
+    t = LQTTable.build(spark.createDataFrame(pdf), bounds, tiebreaker="pid", persist=False)
+    probes = spark.createDataFrame(pd.DataFrame({"qid": pid, "qx": x, "qy": y}))
+    box = (F.col("qx"), F.col("qx"), F.col("qy"), F.col("qy"))
+    got = None
+    for level in range(1, STORE_SPLIT_LEVEL + 1):
+        c = _cell_candidates(t, probes, ["qid"], box, level).select(
+            F.lit(level).alias("level"), "qid", "pid"
+        )
+        got = c if got is None else got.unionByName(c)
+    got = {tuple(r) for r in got.collect()}
+    hits = np.argwhere((x[:, None] == x[None, :]) & (y[:, None] == y[None, :]))
+    missed = [
+        (level, int(q), int(p), bool(main[p]))
+        for level in range(1, STORE_SPLIT_LEVEL + 1)
+        for q, p in hits
+        if (level, int(q), int(p)) not in got
+    ]
+    assert not missed, missed[:10]
 
 
 def test_distance_join_requires_unique_id(spark):
